@@ -18,11 +18,18 @@ scale: shuffle per iteration ∝ |nodes|, not |edges|.
 
 Only the scalar dangling-rank mass touches the driver (one 1-row action
 per iteration, like k-means' k×dim centroid collect).
+
+The loops that stop on a data-dependent condition (:func:`k_core`,
+:func:`shortest_paths`) make exactly ONE Spark action per round: the
+round's table is eagerly ``localCheckpoint``-ed and the stop signal —
+whether any row is left to peel or to expand — rides that same job as
+an ``Observation`` metric (:func:`_checkpoint_any`), never a separate
+``count()``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 #: at most one pagerank edge cache stays pinned per process (same
@@ -385,8 +392,11 @@ def label_propagation(
 
 def _symmetrize(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     """Undirected-graph normalization shared by
-    :func:`label_propagation` and :func:`k_core`: both directions of
-    every edge, self-loops dropped, duplicates collapsed."""
+    :func:`label_propagation`, :func:`k_core` and
+    :func:`shortest_paths`: both directions of every edge, self-loops
+    dropped, duplicates collapsed. The rows are hash-partitioned on
+    ``src`` BEFORE the dedup, so the dedup and any later per-``src``
+    aggregation (k_core's degree count) share one shuffle."""
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
@@ -395,8 +405,26 @@ def _symmetrize(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .filter(F.col("src") != F.col("dst"))
+        .repartition("src")
         .distinct()
     )
+
+
+def _checkpoint_any(
+    df: DataFrame, cond: Column | None = None
+) -> tuple[DataFrame, bool]:
+    """Eagerly ``localCheckpoint`` ``df`` and report whether any of its
+    rows satisfies ``cond`` (any row at all when ``cond`` is None), in
+    ONE Spark action: the count rides the checkpoint's own job as a
+    ``pyspark.sql.Observation`` metric instead of a separate
+    ``count()``. Only zero versus non-zero is returned, because a
+    retried task can add its rows to an observed count twice."""
+    obs = Observation()
+    hit = F.lit(1) if cond is None else F.when(cond, F.lit(1))
+    df = df.observe(obs, F.count(hit).alias("n")).localCheckpoint(
+        eager=True
+    )
+    return df, obs.get["n"] > 0
 
 
 def k_core(
@@ -411,43 +439,42 @@ def k_core(
     definition (Seidman '83), computed by repeatedly deleting nodes of
     degree < k until a fixed point.
 
-    Peeling is the textbook distributed formulation: each round is one
-    degree aggregation over the surviving edge list plus one semi-join
-    keeping edges whose BOTH endpoints survive. The edge frame is
-    eagerly ``localCheckpoint``-ed per round (the repo's iterative-loop
-    rule — persist alone never truncates lineage), and the loop exits
-    as soon as a round deletes nothing. ``max_rounds`` bounds the
-    DELETING rounds only — the final confirming round (the one that
-    observes the fixed point) is always free, so a graph that
-    stabilizes in exactly ``max_rounds`` waves succeeds. Needing more
-    deleting rounds than that raises rather than returning a
-    half-peeled subgraph (the same fail-loudly rationale as
-    hierarchy's cycle guard). Wave count is bounded by the graph's
-    degeneracy-ordering depth in practice — a handful of rounds on
-    power-law graphs.
+    Each peel round makes exactly ONE Spark action: an eager
+    ``localCheckpoint`` of the current ``(node, degree)`` table, with
+    the number of nodes below ``k`` observed on that same job. A round
+    that observes none returns the checkpointed table as the core.
+    Otherwise the next degree table is the base symmetrized edge list
+    semi-joined on both ends against the checkpoint's surviving nodes
+    and re-aggregated — one checkpoint per round and a plan depth that
+    stays constant however many rounds run. ``max_rounds`` bounds the
+    DELETING rounds only — the final round (the one that observes the
+    fixed point) is always free, so a graph that stabilizes in exactly
+    ``max_rounds`` waves succeeds. Needing more deleting rounds than
+    that raises rather than returning a half-peeled subgraph (the same
+    fail-loudly rationale as hierarchy's cycle guard). Wave count is
+    bounded by the graph's degeneracy-ordering depth in practice — a
+    handful of rounds on power-law graphs.
 
     Input direction and self-loops are normalized away exactly as in
     :func:`label_propagation`. Returns ``(node, degree)`` for the
     surviving nodes with their degree INSIDE the core (≥ k by
-    construction). Deterministic: the fixed point of peeling is unique
-    regardless of deletion order, so no tie-break is even needed.
+    construction); an empty edge list gives an empty frame.
+    Deterministic: the fixed point of peeling is unique regardless of
+    deletion order, so no tie-break is even needed.
     """
-    e = _symmetrize(edges, src_col, dst_col).localCheckpoint(eager=True)
-    n_edges = e.count()
-    deleting_rounds = 0
-    while n_edges > 0:
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).select("src")
-        e2 = (
-            e.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            # eager=False: n2 below materializes the checkpoint — one
-            # job launch per peel round instead of two (round-12)
-            .localCheckpoint(eager=False)
+    e = _symmetrize(edges, src_col, dst_col)
+
+    def degrees(sub: DataFrame) -> DataFrame:
+        return sub.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).alias("degree")
         )
-        n2 = e2.count()
-        if n2 == n_edges:  # confirming round: fixed point observed
-            break
+
+    deg = degrees(e)
+    deleting_rounds = 0
+    while True:
+        deg, peels = _checkpoint_any(deg, F.col("degree") < k)
+        if not peels:  # fixed point observed
+            return deg
         deleting_rounds += 1
         if deleting_rounds > max_rounds:
             raise ValueError(
@@ -455,10 +482,11 @@ def k_core(
                 "rounds — raise max_rounds (each wave deletes ≥ 1 node, "
                 "so deleting rounds are bounded by the node count)"
             )
-        e, n_edges = e2, n2
-    return e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree")
-    )
+        keep = deg.filter(F.col("degree") >= k).select("node")
+        deg = degrees(
+            e.join(keep, e["src"] == keep["node"], "left_semi")
+            .join(keep, e["dst"] == keep["node"], "left_semi")
+        )
 
 
 def shortest_paths(
@@ -478,11 +506,11 @@ def shortest_paths(
     anti-join against the settled set — so per-round work is
     proportional to the frontier's edge boundary, not the whole graph
     (the textbook distributed BFS; Pregel's signal/collect specialized
-    to hop counting). The settled frame is eagerly
-    ``localCheckpoint``-ed every round (the repo-wide iterative-loop
-    rule: persist does not truncate lineage) and the loop exits early
-    on an empty frontier — the per-round ``count()`` is a bounded
-    convergence scalar, the k-means/BPE driver-state contract.
+    to hop counting). Each round's new frontier is eagerly
+    ``localCheckpoint``-ed with its row count observed on that same
+    job (no separate ``count()``), and the loop exits early on an empty
+    frontier; the settled frame is re-checkpointed every round (the
+    repo-wide iterative-loop rule: persist does not truncate lineage).
 
     At 100 TB-graph scale the anti-join against an ever-growing
     settled set is the known cost center; the standard refinement
@@ -497,19 +525,14 @@ def shortest_paths(
     ).localCheckpoint(eager=True)
     frontier = dist.select("node")
     for d in range(1, max_depth + 1):
-        new = (
+        new, grew = _checkpoint_any(
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(d))
-            # eager=False: the convergence count() right below is the
-            # materializing action, so the round pays ONE job launch
-            # instead of two (the logical plan is truncated either
-            # way; round-12 optimization, ~1 job × max_depth saved)
-            .localCheckpoint(eager=False)
         )
-        if new.count() == 0:
+        if not grew:
             break
         # the settled set is re-checkpointed each round on purpose: the
         # alternative (lazy union of per-round checkpointed frontiers)

@@ -7732,14 +7732,28 @@ def _qnum(name: str) -> int:
 #: budget and _ordered_names asserts it.
 _DRIVER_SAMPLE = 50
 
-#: Round-12 priority prefix (must stay ≤ _DRIVER_SAMPLE entries).
-#: EMPTY — no open forensic (round 11 delivered the first zero-red
-#: driver file and a 273/273 latest-green union). Every slot goes to
-#: the staleness sort: the round's new never-sampled queries first,
-#: then the r6-vintage evidence band (37 queries — q99/q105/q111/...
-#: per VERDICT r11 Next round #2) and ascending vintage, moving the
-#: union freshness floor to r7.
-_R12_PRIORITY: list[str] = []
+#: Priority prefix (must stay ≤ _DRIVER_SAMPLE entries): queries
+#: whose operators changed since their last driver-oracle row, so the
+#: next driver sample covers them first — the k-core and BFS loops that
+#: now make one Spark action per round, then the round-13 rewrites
+#: (sketch build shapes, query-level pins, the q267 join planner).
+#: Everything after it follows the staleness sort.
+_PRIORITY: list[str] = [
+    "q192_kcore",
+    "q210_shortest_paths",
+    "q221_kmv_distinct",
+    "q238_rolling_distinct_kmv",
+    "q242_kmv_rollup_cube",
+    "q252_ams_f2_selfjoin",
+    "q272_superspreaders",
+    "q282_adaptive_skew_join",
+    "q229_poisson_bootstrap",
+    "q209_naive_bayes",
+    "q200_ml_curation_capstone",
+    "q193_logreg_quality",
+    "q188_countmin_sketch",
+    "q267_join_order_greedy",
+]
 
 #: rows-only-by-design entries (engine-specific internals, no DuckDB
 #: twin) are pushed to the back of their staleness band since a driver
@@ -7789,11 +7803,13 @@ def _ordered_names() -> list[str]:
     purely dict ordering.
     """
     names = list(REGISTRY)
-    prio = {n: i for i, n in enumerate(_R12_PRIORITY)}
-    assert len(_R12_PRIORITY) <= _DRIVER_SAMPLE, (
-        f"priority prefix {len(_R12_PRIORITY)} > driver sample budget "
+    prio = {n: i for i, n in enumerate(_PRIORITY)}
+    assert len(_PRIORITY) <= _DRIVER_SAMPLE, (
+        f"priority prefix {len(_PRIORITY)} > driver sample budget "
         f"{_DRIVER_SAMPLE} — tail entries would never get driver rows"
     )
+    unknown = sorted(set(_PRIORITY) - set(REGISTRY))
+    assert not unknown, f"priority names not in the registry: {unknown}"
     seen = _driver_rounds_seen()
 
     def group(n: str) -> tuple[int, int, int, int]:
@@ -10368,10 +10384,12 @@ def q192(spark, sf_dir):
     degree < 4 from the quadratic link graph until the unique fixed
     point — the standard dense-subgraph primitive (spam-farm and
     community-core detection on link graphs; the density complement to
-    q123's centrality and q145's triangles). Each round is one degree
-    aggregation plus two semi-joins on the surviving edges,
-    localCheckpoint-ed so the plan stays constant; the loop exits on
-    the first round that deletes nothing (2–3 rounds here). Peeling
+    q123's centrality and q145's triangles). Each round is one eager
+    localCheckpoint of the degree table, which also observes how many
+    nodes fall below 4; the loop exits on the first round that finds
+    none (2–3 rounds here). The node count joins the edges as a lazy
+    one-row cross join instead of an eager count(), so it needs no
+    Spark action of its own. Peeling
     order provably never changes the fixed point, so the oracle
     unrolls a fixed 6 rounds — extra rounds are no-ops — and the
     result hash-gates exactly: surviving nodes AND their in-core
@@ -10379,13 +10397,18 @@ def q192(spark, sf_dir):
     from gpi_etl_spark.operators.linkgraph import k_core
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    cnt = docs.count()
-    edges = docs.select(
+    cnt = docs.agg(F.count(F.lit(1)).alias("cnt"))
+    # shuffle_replicate_nl plans the cross join as a cartesian product:
+    # a broadcast would add a job per round just to collect the one row
+    edges = docs.crossJoin(cnt.hint("shuffle_replicate_nl")).select(
         F.col("doc_id").alias("src"),
         F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("k"),
+        "cnt",
     ).select(
         "src",
-        ((F.col("src") * F.col("src") + F.col("k")) % cnt).alias("dst"),
+        ((F.col("src") * F.col("src") + F.col("k")) % F.col("cnt")).alias(
+            "dst"
+        ),
     )
     core = k_core(edges, k=4)
     return core.select(

@@ -5,6 +5,20 @@ engine is lazy/distributed, so the session pins everything that could
 make results drift from the DuckDB oracle (timezone, ANSI mode) and
 enables the adaptive machinery that matters at 100 TB (AQE, skew join,
 partition coalescing).
+
+It also turns off PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+every ``F.*``/Column call pays several py4j round trips (active
+session, conf lookup, origin set and clear), a Python stack walk and a
+failing ``import IPython``; the operators here build plans from
+hundreds of such calls per query, so the capture roughly doubles the
+driver's py4j traffic. The trade-off: an analysis or runtime error raised in a
+``get_spark`` session no longer names the Python file:line that built
+the failing expression (the message and the JVM stack are unchanged).
+Sessions the caller builds itself (the vanilla driver session) do not
+get the setting. PySpark reads it once per Python process, at the
+first Column call, so the session active then decides for the whole
+process.
 """
 
 from __future__ import annotations
@@ -52,6 +66,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # -- quieter local runs ---------------------------------------
         .config("spark.ui.enabled", "false")
+        # -- no per-Column call-site capture (see module docstring) ---
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

@@ -291,7 +291,9 @@ def test_poisson_bootstrap_wide_agg_equals_posexplode_reference(spark):
     an unpivot over groups — must be row-for-row identical to the
     original posexplode-per-row reference, including NULL cents
     (weight still counts toward n_eff, the product drops from the
-    sum), multi-group inputs, and an empty input (empty table)."""
+    sum), multi-group inputs, and an empty input, grouped and
+    ungrouped (empty table: an ungrouped aggregate must not leak its
+    one all-NULL row into ``replicas`` NULL rows)."""
     from pyspark.sql import functions as F
 
     from gpi_etl_spark.functions.hof import let_
@@ -370,9 +372,11 @@ def test_poisson_bootstrap_wide_agg_equals_posexplode_reference(spark):
     )
     assert got == want and len(got) == 32
     empty = spark.createDataFrame([], "g string, id long, cents long")
-    assert (
-        poisson_bootstrap_means(
-            empty, ("g",), "cents", "id", replicas=8
-        ).count()
-        == 0
-    )
+    for group_cols in (("g",), ()):
+        assert (
+            poisson_bootstrap_means(
+                empty, group_cols, "cents", "id", replicas=8
+            ).collect()
+            == reference(empty, group_cols, "cents", "id", 8).collect()
+            == []
+        )

@@ -1,8 +1,11 @@
 """k-core peeling: known cores on hand-built graphs, cascade
-deletions, uniqueness of the fixed point under partitioning, and the
-fail-loudly round cap."""
+deletions, uniqueness of the fixed point under partitioning, the
+fail-loudly round cap, the empty graph, and the number of Spark jobs
+one peel takes."""
 
 from __future__ import annotations
+
+import uuid
 
 import pytest
 
@@ -61,3 +64,29 @@ def test_stabilizing_in_exactly_max_rounds_succeeds(spark):
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
     got = _kcore(spark, k4 + [(3, 10), (10, 11)], k=3, max_rounds=1)
     assert got == {0: 3, 1: 3, 2: 3, 3: 3}
+
+
+def test_empty_edge_list_gives_empty_core(spark):
+    assert _kcore(spark, [], k=2) == {}
+
+
+def test_one_spark_action_per_peel_round(spark):
+    # K4 + pendant chain, k=3: two rounds (one deleting, one observing
+    # the fixed point), each ONE eager checkpoint whose own job carries
+    # the below-k count — no symmetrize checkpoint, no per-round
+    # count(), no final re-aggregation. The previous shape (eager
+    # symmetrize checkpoint + count, count() per round, a re-aggregated
+    # result) took 18 jobs for the same call.
+    from gpi_etl_spark.operators.linkgraph import k_core
+
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    df = spark.createDataFrame(k4 + [(3, 10), (10, 11)], "src long, dst long")
+    sc = spark.sparkContext
+    group = f"kcore-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "k_core job count")
+    try:
+        k_core(df, k=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
