@@ -240,25 +240,32 @@ def _extra_entries():
       xxhash64 pipeline instead (JVM hash intrinsics, what a 100 TB
       run would use), which also keeps the r1–r5 series' comparable
       point.
+
+    Like a registry dispatch, each drains the run scope first, so no
+    pin from the previous entry or lane is reused.
     """
     from pyspark.sql import functions as F
 
+    from gpi_etl_spark import runscope
     from gpi_etl_spark.operators import dedup
     from gpi_etl_spark.plans.curation_dags import curation_dag_v2
     from gpi_etl_spark.queries import t
 
     def minhash_xxhash64(spark, sf):
+        runscope.drain()
         docs = t(spark, sf, "documents").filter(F.col("doc_id") % 10 == 0)
         return dedup.minhash_lsh_pairs(
             docs, n=1, num_hashes=64, bands=16, threshold=0.5,
             hash_mode="xxhash64",
         )
 
+    def curation_dag_v2_persist(spark, sf):
+        runscope.drain()
+        return curation_dag_v2(spark, sf, persist_stages=True)
+
     return {
         "q33_minhash_xxhash64": minhash_xxhash64,
-        "q161_curation_dag_v2_persist": (
-            lambda spark, sf: curation_dag_v2(spark, sf, persist_stages=True)
-        ),
+        "q161_curation_dag_v2_persist": curation_dag_v2_persist,
     }
 
 

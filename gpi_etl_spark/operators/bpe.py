@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import runscope
+
 #: end-of-word marker, per the original BPE formulation
 EOW = "</w>"
 
@@ -102,7 +104,7 @@ def bpe_train(
     words = word_counts(df, text_col).withColumn(
         "symbols", _char_symbols(F.col("word"))
     )
-    words = words.localCheckpoint(eager=True)
+    words, _ = runscope.checkpoint(words)
 
     merges: list[tuple[str, str]] = []
     for step in range(num_merges):
@@ -141,7 +143,7 @@ def bpe_train(
         )
         # keep lineage flat across iterations (fold-upon-fold plans
         # otherwise nest num_merges deep)
-        words = words.localCheckpoint(eager=True)
+        words, _ = runscope.checkpoint(words)
     return merges, words
 
 

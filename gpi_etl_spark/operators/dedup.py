@@ -19,13 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import runscope
 from gpi_etl_spark.functions.rounding import fs6
-
-
-#: at most one shingle-frame cache stays pinned per process (shared by
-#: ngram_jaccard_pairs and jaccard_pairs_prefix_filtered — the next
-#: call of either evicts; unpersist never breaks lazy plans)
-_LIVE_SHINGLE_CACHES: list[DataFrame] = []
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -126,10 +121,7 @@ def ngram_jaccard_pairs(
     shingle), which is why the scale path is :func:`minhash_lsh_pairs`;
     this exact form is the oracle.
     """
-    while _LIVE_SHINGLE_CACHES:
-        _LIVE_SHINGLE_CACHES.pop().unpersist()
-    sh = word_shingles(df, text_col, id_col, n).cache()
-    _LIVE_SHINGLE_CACHES.append(sh)
+    sh = runscope.pin(word_shingles(df, text_col, id_col, n))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -202,12 +194,6 @@ def minhash_signatures(
     )
 
 
-#: at most one LSH signature cache stays pinned per process (see
-#: minhash_lsh_pairs); callers running two LSH jobs truly concurrently
-#: should pass persist_signatures=False on one of them.
-_LIVE_SIG_CACHES: list[DataFrame] = []
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -240,15 +226,7 @@ def minhash_lsh_pairs(
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, text_col, id_col, n, num_hashes, hash_mode)
     if persist_signatures:
-        from pyspark.storagelevel import StorageLevel
-
-        # Bound cache growth across repeated calls in one session:
-        # drop the previous call's signature cache before pinning this
-        # one (unpersist never breaks lazy plans — they just recompute).
-        while _LIVE_SIG_CACHES:
-            _LIVE_SIG_CACHES.pop().unpersist()
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-        _LIVE_SIG_CACHES.append(sig)
+        sig = runscope.pin(sig)
     band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
     # hash the signature slice (array<long>) directly — no per-band
     # string materialization; poly mode folds the slice with the same
@@ -419,7 +397,7 @@ def connected_components(
     # and without this the caller's whole pair-generation lineage (a
     # PPJoin, a minhash bucket join, ...) re-executes per round — the
     # edge list is the loop invariant, the labels are the loop state
-    sym = sym.localCheckpoint(eager=True)
+    sym, _ = runscope.checkpoint(sym)
     nodes = sym.select(F.col("u").alias("node")).distinct()
     labels = nodes.withColumn("lbl", F.col("node"))
     for i in range(max_iter):
@@ -444,7 +422,7 @@ def connected_components(
                 (F.col("nlbl") < F.col("lbl")).alias("_chg"),
             )
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels, _ = runscope.checkpoint(new_labels)
         changed = new_labels.filter(F.col("_chg")).limit(1).count()
         labels = new_labels.select("node", "lbl")
         if changed == 0:
@@ -617,14 +595,8 @@ def jaccard_pairs_prefix_filtered(
     sh = word_shingles(df, text_col, id_col, n)
     # the shingle frame feeds three consumers (prefix ranking, the
     # global-frequency agg inside it, and the full-set verification),
-    # so it is pinned for the run — bounded by the same single-live-
-    # cache policy as the signature cache above (repeated calls in one
-    # session — bench's cold+warm lanes, the prefix probe — would
-    # otherwise accumulate pinned copies)
-    while _LIVE_SHINGLE_CACHES:
-        _LIVE_SHINGLE_CACHES.pop().unpersist()
-    sh = sh.persist()
-    _LIVE_SHINGLE_CACHES.append(sh)
+    # so it is pinned for the run
+    sh = runscope.pin(sh)
     ranked = prefix_shingles(sh, id_col, threshold)
     a = ranked.select(F.col(id_col).alias("id_a"), "shingle")
     b = ranked.select(F.col(id_col).alias("id_b"), "shingle")

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import runscope
+
 
 def _cos_to_literal(v: Column, vec: list[float]) -> Column:
     """Cosine between an array<double> column and a Python vector
@@ -86,7 +88,7 @@ def mmr_select(
         F.col(vec_col).alias("_v"),
         _cos_to_literal(F.col(vec_col), query_vec).alias("_rel"),
     )
-    scored = scored.localCheckpoint(eager=True)
+    scored, _ = runscope.checkpoint(scored)
 
     picks: list[tuple] = []
     sel_ids: list = []
@@ -130,8 +132,8 @@ def mmr_select(
             pen = (
                 F.greatest(F.col("_pen"), new_cos) if has_pen else new_cos
             )
-            scored = scored.select(
-                "_id", "_v", "_rel", pen.alias("_pen")
-            ).localCheckpoint(eager=True)
+            scored, _ = runscope.checkpoint(
+                scored.select("_id", "_v", "_rel", pen.alias("_pen"))
+            )
             has_pen = True
     return picks

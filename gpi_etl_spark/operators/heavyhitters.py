@@ -28,9 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: at most one heavy-hitters item cache stays pinned per process (same
-#: policy as similarity._LIVE_KMEANS_CACHES)
-_LIVE_HH_CACHES: list[DataFrame] = []
+from gpi_etl_spark import runscope
 
 
 def _mg_update(counters: dict, v, w: int, k: int) -> None:
@@ -109,16 +107,9 @@ def heavy_hitters(
     (total count, MG candidate pass, exact recount), and when the
     input is itself a derived frame — q171's explode over the
     tokenizer — re-deriving it per pass would triple the upstream
-    scan. The cache materializes on the ``count()`` action; at most
-    one stays pinned per process (next call evicts).
+    scan. The cache materializes on the ``count()`` action.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    items = items.select(item_col)
-    while _LIVE_HH_CACHES:
-        _LIVE_HH_CACHES.pop().unpersist()
-    items = items.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_HH_CACHES.append(items)
+    items = runscope.pin(items.select(item_col))
     total = items.count()
     if total == 0:
         return items.withColumn(
@@ -179,16 +170,11 @@ def superspreaders(
     policy): the pairs subtree feeds the register build AND the exact
     recount, the candidate frame feeds the recount's semi-join AND the
     final join — unpinned, the upstream join + dedup shuffle executed
-    twice and the sort-limit twice (measured 2x at sf0.1). At most one
-    heavy-hitters op's caches stay pinned per process."""
-    from pyspark.storagelevel import StorageLevel
-
+    twice and the sort-limit twice (measured 2x at sf0.1)."""
     from gpi_etl_spark.operators.sketches import kmv_build, kmv_estimate
     from gpi_etl_spark.functions.rounding import fs6
 
-    while _LIVE_HH_CACHES:
-        _LIVE_HH_CACHES.pop().unpersist()
-    pairs = (
+    pairs = runscope.pin(
         df.filter(
             F.col(key_col).isNotNull() & F.col(partner_col).isNotNull()
         )
@@ -197,17 +183,12 @@ def superspreaders(
             F.col(partner_col).cast("string").alias("_sp"),
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _LIVE_HH_CACHES.append(pairs)
     regs = kmv_build(pairs, "_sp", ("_sk",), k=k, hash_mode=hash_mode)
     est = kmv_estimate(regs, ("_sk",))
-    cands = (
-        est.orderBy(F.col("est").desc(), F.col("_sk").asc())
-        .limit(top_n)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    cands = runscope.pin(
+        est.orderBy(F.col("est").desc(), F.col("_sk").asc()).limit(top_n)
     )
-    _LIVE_HH_CACHES.append(cands)
     exact = (
         pairs.join(
             F.broadcast(cands.select("_sk")), "_sk", "left_semi"

@@ -16,9 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: at most one closure-state cache pinned per process (same policy as
-#: similarity._LIVE_KMEANS_CACHES)
-_LIVE_HIER_CACHES: list[DataFrame] = []
+from gpi_etl_spark import runscope
 
 
 def transitive_root(
@@ -42,8 +40,6 @@ def transitive_root(
 
     Returns ``(node, root, depth)``.
     """
-    from pyspark.storagelevel import StorageLevel
-
     dangling = (
         nodes.filter(F.col(parent_col).isNotNull())
         .select(F.col(parent_col).alias("_p"))
@@ -61,34 +57,32 @@ def transitive_root(
             "(subtrees under them would be silently lost)"
         )
 
-    while _LIVE_HIER_CACHES:
-        _LIVE_HIER_CACHES.pop().unpersist()
-
-    state = nodes.select(
-        F.col(id_col).alias("node"),
-        F.coalesce(F.col(parent_col), F.col(id_col)).alias("anc"),
-        F.when(F.col(parent_col).isNull(), F.lit(0))
-        .otherwise(F.lit(1))
-        .cast("long")
-        .alias("depth"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_HIER_CACHES.append(state)
+    state = runscope.pin(
+        nodes.select(
+            F.col(id_col).alias("node"),
+            F.coalesce(F.col(parent_col), F.col(id_col)).alias("anc"),
+            F.when(F.col(parent_col).isNull(), F.lit(0))
+            .otherwise(F.lit(1))
+            .cast("long")
+            .alias("depth"),
+        )
+    )
 
     total = state.agg(F.sum("depth").alias("s")).collect()[0]["s"] or 0
     converged = False
     for _ in range(max_iters):
         a, b = state.alias("a"), state.alias("b")
-        nxt = a.join(b, F.col("a.anc") == F.col("b.node")).select(
-            F.col("a.node").alias("node"),
-            F.col("b.anc").alias("anc"),
-            (F.col("a.depth") + F.col("b.depth")).alias("depth"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        nxt = runscope.pin(
+            a.join(b, F.col("a.anc") == F.col("b.node")).select(
+                F.col("a.node").alias("node"),
+                F.col("b.anc").alias("anc"),
+                (F.col("a.depth") + F.col("b.depth")).alias("depth"),
+            )
+        )
         new_total = nxt.agg(F.sum("depth").alias("s")).collect()[0]["s"] or 0
         prev = state
         state = nxt
-        _LIVE_HIER_CACHES.append(state)
         prev.unpersist()
-        _LIVE_HIER_CACHES.remove(prev)
         if new_total == total:
             converged = True
             break

@@ -23,18 +23,18 @@ The loops that stop on a data-dependent condition (:func:`k_core`,
 :func:`shortest_paths`) make exactly ONE Spark action per round: the
 round's table is eagerly ``localCheckpoint``-ed and the stop signal —
 whether any row is left to peel or to expand — rides that same job as
-an ``Observation`` metric (:func:`_checkpoint_any`), never a separate
-``count()``.
+an ``Observation`` metric (:func:`gpi_etl_spark.runscope.checkpoint`),
+never a separate ``count()``. Every pin and checkpoint here goes
+through :mod:`gpi_etl_spark.runscope` and is released when the next
+registry query is dispatched.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: at most one pagerank edge cache stays pinned per process (same
-#: policy as similarity._LIVE_KMEANS_CACHES)
-_LIVE_PR_CACHES: list[DataFrame] = []
+from gpi_etl_spark import runscope
 
 
 def pagerank(
@@ -64,8 +64,6 @@ def pagerank(
 
     Returns a DataFrame ``(node, rank)`` with one row per node.
     """
-    from pyspark.storagelevel import StorageLevel
-
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
@@ -81,14 +79,10 @@ def pagerank(
     ew = e.join(outdeg, "src").select(
         "src", "dst", (F.lit(1.0) / F.col("_outdeg")).alias("w")
     )
-    while _LIVE_PR_CACHES:
-        _LIVE_PR_CACHES.pop().unpersist()
-    ew = ew.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PR_CACHES.append(ew)
+    ew = runscope.pin(ew.repartition("src"))
     # nodes are re-scanned every iteration (left side of the rank
     # update) and for the dangling mass — pin them too
-    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PR_CACHES.append(nodes)
+    nodes = runscope.pin(nodes)
 
     n = nodes.count()
     if n == 0:
@@ -96,10 +90,9 @@ def pagerank(
     # one up-front action decides whether the per-iteration dangling
     # scan is needed at all: a link graph where every page has
     # out-links (common after edge harvesting) pays zero extra jobs
-    dangling = nodes.join(
-        outdeg, nodes["node"] == outdeg["src"], "left_anti"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PR_CACHES.append(dangling)
+    dangling = runscope.pin(
+        nodes.join(outdeg, nodes["node"] == outdeg["src"], "left_anti")
+    )
     has_dangling = redistribute_dangling and bool(dangling.head(1))
 
     # with dangling mass each iteration reads the current ranks twice
@@ -109,7 +102,7 @@ def pagerank(
     # loop stays one lazy composed plan — zero per-iteration jobs.
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     if has_dangling:
-        ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
+        ranks = runscope.pin(ranks)
     base = (1.0 - damping) / n
     for _ in range(iters):
         d_mass = 0.0
@@ -143,13 +136,11 @@ def pagerank(
         if has_dangling:
             # materialize THEN drop the previous iteration's cache —
             # the new ranks' lineage reads it exactly once here
-            ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
+            ranks = runscope.pin(ranks)
             ranks.count()
             prev.unpersist()
-    if has_dangling:
-        # the final rank table stays pinned (callers usually aggregate
-        # it several ways); the next pagerank() call evicts it
-        _LIVE_PR_CACHES.append(ranks)
+    # with dangling mass the final rank table stays pinned (callers
+    # usually aggregate it several ways)
     return ranks
 
 
@@ -256,8 +247,6 @@ def hits(
 
     Returns ``(node, hub, auth)`` with L1-normalized scores.
     """
-    from pyspark.storagelevel import StorageLevel
-
     if persist_iterations is None:
         persist_iterations = iters > _HITS_LAZY_MAX_ITERS
 
@@ -269,11 +258,8 @@ def hits(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    while _LIVE_PR_CACHES:
-        _LIVE_PR_CACHES.pop().unpersist()
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PR_CACHES.extend([e, nodes])
+    e = runscope.pin(e)
+    nodes = runscope.pin(nodes)
 
     hub = nodes.withColumn("hub", F.lit(1.0))
     auth = nodes.withColumn("auth", F.lit(1.0))  # iters=0: uniform
@@ -291,10 +277,8 @@ def hits(
             # does not — the analyzer still rebuilds the full composed
             # lineage each generation, which is what blew the heap at
             # deep iteration counts). Eager: materializes now, so each
-            # generation is exactly one bounded job; superseded
-            # checkpoint blocks are reclaimed by the ContextCleaner
-            # when the previous generation's frame goes unreferenced.
-            auth = auth.localCheckpoint(eager=True)
+            # generation is exactly one bounded job.
+            auth, _ = runscope.checkpoint(auth)
         h_raw = (
             e.join(auth, e["dst"] == auth["node"])
             .groupBy("src")
@@ -304,11 +288,10 @@ def hits(
             h_raw, nodes["node"] == h_raw["src"], "left"
         ).select("node", F.coalesce("_h", F.lit(0.0)).alias("hub"))
         if persist_iterations:
-            hub = hub.localCheckpoint(eager=True)
+            hub, _ = runscope.checkpoint(hub)
     # single end normalization: the scores are each read twice below
     # (sum + division), so pin them once to keep the plan small
-    scores = hub.join(auth, "node").persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PR_CACHES.append(scores)
+    scores = runscope.pin(hub.join(auth, "node"))
     totals = scores.agg(
         F.sum("hub").alias("_zh"), F.sum("auth").alias("_za")
     )
@@ -354,7 +337,7 @@ def label_propagation(
     rounds. No counterpart in the reference (no graph logic at all);
     textbook LPA made deterministic.
     """
-    e = _symmetrize(edges, src_col, dst_col).localCheckpoint(eager=True)
+    e, _ = runscope.checkpoint(_symmetrize(edges, src_col, dst_col))
     labels = (
         e.select(F.col("src").alias("node"))
         .distinct()
@@ -379,13 +362,11 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("node", F.col("lbl").alias("new_lbl"))
         )
-        labels = (
-            labels.join(top, "node", "left")
-            .select(
+        labels, _ = runscope.checkpoint(
+            labels.join(top, "node", "left").select(
                 "node",
                 F.coalesce("new_lbl", "lbl").alias("lbl"),
             )
-            .localCheckpoint(eager=True)
         )
     return labels
 
@@ -408,23 +389,6 @@ def _symmetrize(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
         .repartition("src")
         .distinct()
     )
-
-
-def _checkpoint_any(
-    df: DataFrame, cond: Column | None = None
-) -> tuple[DataFrame, bool]:
-    """Eagerly ``localCheckpoint`` ``df`` and report whether any of its
-    rows satisfies ``cond`` (any row at all when ``cond`` is None), in
-    ONE Spark action: the count rides the checkpoint's own job as a
-    ``pyspark.sql.Observation`` metric instead of a separate
-    ``count()``. Only zero versus non-zero is returned, because a
-    retried task can add its rows to an observed count twice."""
-    obs = Observation()
-    hit = F.lit(1) if cond is None else F.when(cond, F.lit(1))
-    df = df.observe(obs, F.count(hit).alias("n")).localCheckpoint(
-        eager=True
-    )
-    return df, obs.get["n"] > 0
 
 
 def k_core(
@@ -472,7 +436,7 @@ def k_core(
     deg = degrees(e)
     deleting_rounds = 0
     while True:
-        deg, peels = _checkpoint_any(deg, F.col("degree") < k)
+        deg, peels = runscope.checkpoint(deg, F.col("degree") < k)
         if not peels:  # fixed point observed
             return deg
         deleting_rounds += 1
@@ -519,13 +483,15 @@ def shortest_paths(
     node id every round. No counterpart in the reference (no graph
     logic); textbook BFS made deterministic.
     """
-    e = _symmetrize(edges, src_col, dst_col).localCheckpoint(eager=True)
-    dist = sources.select(
-        F.col("node").cast("long").alias("node"), F.lit(0).alias("dist")
-    ).localCheckpoint(eager=True)
+    e, _ = runscope.checkpoint(_symmetrize(edges, src_col, dst_col))
+    dist, _ = runscope.checkpoint(
+        sources.select(
+            F.col("node").cast("long").alias("node"), F.lit(0).alias("dist")
+        )
+    )
     frontier = dist.select("node")
     for d in range(1, max_depth + 1):
-        new, grew = _checkpoint_any(
+        new, grew = runscope.checkpoint(
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
@@ -540,6 +506,6 @@ def shortest_paths(
         # every later round re-scans one stage per accumulated leaf,
         # O(rounds²) task launches, while one flat memory-checkpointed
         # frame keeps the anti-join to a single scan
-        dist = dist.unionByName(new).localCheckpoint(eager=True)
+        dist, _ = runscope.checkpoint(dist.unionByName(new))
         frontier = new.select("node")
     return dist

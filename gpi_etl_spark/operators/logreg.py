@@ -39,14 +39,9 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from gpi_etl_spark import runscope
 from gpi_etl_spark.functions.rounding import fs6
-
-#: single-live-cache eviction (same policy as similarity/_LIVE_KMEANS,
-#: heavyhitters/_LIVE_HH): a new fit evicts the previous fit's pinned
-#: feature frame, so repeated calls in one session cannot accumulate.
-_LIVE_LOGREG_CACHES: list[DataFrame] = []
 
 #: floor for a feature's standard deviation: a constant column z-scores
 #: to exactly 0 instead of dividing by zero. 1e-12 parses to the same
@@ -122,10 +117,7 @@ def logreg_train(
         F.col(label_col).cast("double").alias("_y"),
         *_z_cols(feature_cols, mus, sds),
     )
-    while _LIVE_LOGREG_CACHES:
-        _LIVE_LOGREG_CACHES.pop().unpersist()
-    feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_LOGREG_CACHES.append(feats)
+    feats = runscope.pin(feats)
 
     w = [0.0] * (d + 1)
     for _ in range(iters):

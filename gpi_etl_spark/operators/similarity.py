@@ -13,11 +13,10 @@ equi-join on bucket keys.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import runscope
 from gpi_etl_spark.functions.rounding import fs6
 
 
@@ -129,36 +128,15 @@ def train_ivf_centroids(
     return cents
 
 
-#: at most one k-means input cache stays pinned per process (see
-#: distributed_kmeans; same policy as dedup._LIVE_SIG_CACHES)
-_LIVE_KMEANS_CACHES: list[DataFrame] = []
-_KMEANS_BASE_LOCK = threading.Lock()
-
-
 def _kmeans_base(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """The double-cast (id, vec) projection every k-means-family
-    trainer iterates over, persisted MEMORY_AND_DISK. Semantically
-    identical requests REUSE the live pin (q212 runs the coarse Lloyd
-    AND the PQ trainer over the same corpus — before round 12 the
-    second trainer evicted the first's cache and re-read the parquet,
-    and the final assignment scan recomputed from source); a different
-    input evicts the pin first, so at most one base stays pinned.
-    Cross-QUERY reuse is impossible by construction: the registry
-    dispatcher (queries.query) evicts this cache on every query entry,
-    so each bench/oracle invocation still computes from parquet."""
-    from pyspark.storagelevel import StorageLevel
-
+    trainer iterates over, pinned for the run. Semantically identical
+    requests share one cached copy through Spark's CacheManager (q212
+    runs the coarse Lloyd AND the PQ trainer over the same corpus, on
+    two threads), and the registry dispatcher's scope drain releases
+    it, so each bench/oracle invocation still computes from parquet."""
     to_double = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = vectors.select(id_col, to_double.alias(vec_col))
-    with _KMEANS_BASE_LOCK:
-        for live in _LIVE_KMEANS_CACHES:
-            if base.sameSemantics(live):
-                return live
-        while _LIVE_KMEANS_CACHES:
-            _LIVE_KMEANS_CACHES.pop().unpersist()
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        _LIVE_KMEANS_CACHES.append(base)
-        return base
+    return runscope.pin(vectors.select(id_col, to_double.alias(vec_col)))
 
 
 def distributed_kmeans(
@@ -186,9 +164,8 @@ def distributed_kmeans(
     The input is persisted MEMORY_AND_DISK for the iteration loop
     (iters+1 passes otherwise re-scan the corpus each round — the MLlib
     pattern caches before iterating); semantically identical inputs
-    share one pin within a query run (:func:`_kmeans_base`), a
-    different input evicts it, and the registry dispatcher evicts on
-    every query entry.
+    share one cached copy within a query run (:func:`_kmeans_base`),
+    released when the next registry query is dispatched.
 
     Returns (centroids ndarray, assigned DataFrame with ``cell``).
     """

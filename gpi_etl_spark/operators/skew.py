@@ -20,6 +20,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import runscope
+
 SALT = "__salt"
 
 
@@ -377,8 +379,6 @@ def join_order_greedy(
     each step exactly one chosen = 1. Reference seat: none (the
     reference has no planner of any kind); textbook System R greedy
     with sketch cardinalities."""
-    from pyspark.storagelevel import StorageLevel
-
     from gpi_etl_spark.functions import xhash
     from gpi_etl_spark.operators.sketches import _bucket_arr
 
@@ -488,13 +488,13 @@ def join_order_greedy(
             F.col("c").alias("_cd"),
         )
         dim_tagged = one if dim_tagged is None else dim_tagged.unionByName(one)
-    dim_tagged = dim_tagged.persist()
+    dim_tagged = runscope.pin(dim_tagged)
 
     # round-13: pin the projected fact — the step-1 frequency pass and
     # the first chosen join both scan it; unpinned, each paid its own
     # full input scan (the same rationale as the chosen-intermediate
     # pins below, applied to step 0)
-    fact = fact.persist(StorageLevel.MEMORY_AND_DISK)
+    fact = runscope.pin(fact)
 
     persisted: "list[DataFrame]" = [dim_tagged, fact]
     results: "list[tuple[int, str, int, int]]" = []
@@ -590,10 +590,10 @@ def join_order_greedy(
                 else left[fact_key].cast("string")
                 == dim[dim_key].cast("string")
             )
-            left = (
-                left.join(dim, cond, "inner")
-                .select(*[left[c] for c in left.columns])
-                .persist(StorageLevel.MEMORY_AND_DISK)
+            left = runscope.pin(
+                left.join(dim, cond, "inner").select(
+                    *[left[c] for c in left.columns]
+                )
             )
             persisted.append(left)
             remaining = [d for d in remaining if d[0] != choice]

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import runscope
+
 
 def pareto_frontier_2d(
     df: DataFrame,
@@ -53,10 +55,10 @@ def pareto_frontier_2d(
     """All non-dominated rows of ``df`` (min ``cost_col``, max
     ``value_col``; both integer). Returns the input rows unchanged."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    part = (
-        df.repartitionByRange(n, F.col(cost_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    part, _ = runscope.checkpoint(
+        df.repartitionByRange(n, F.col(cost_col)).withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
     summaries = sorted(
         (r["_pid"], r["vmax"])

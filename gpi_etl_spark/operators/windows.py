@@ -20,6 +20,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import runscope
+
 
 def forward_fill(
     df: DataFrame,
@@ -286,10 +288,10 @@ def global_rank(
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     cols = [F.col(c) for c in order_cols]
-    part = (
-        df.repartitionByRange(n, *cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    part, _ = runscope.checkpoint(
+        df.repartitionByRange(n, *cols).withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
     counts = sorted(
         (r["_pid"], r["n"])

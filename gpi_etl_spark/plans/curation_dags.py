@@ -13,11 +13,12 @@ operators, same composition; only physical reuse changes), which
 ``tests/test_curation.py::test_curation_dag_persist_matches_lazy``
 asserts, and ``bench.py`` reports both variants.
 
-Stage pins use plain ``persist`` (MEMORY_AND_DISK), not
-``localCheckpoint``: the DAGs are a fixed 4–5-stage composition, so
-lineage depth is bounded and recompute-on-executor-loss safety is worth
-keeping — unlike the unbounded iterative loops in ``linkgraph`` where
-the *plan itself* grows with iteration count.
+Stage pins are :func:`gpi_etl_spark.runscope.pin` (a plain
+MEMORY_AND_DISK persist, released when the next registry query is
+dispatched), not checkpoints: the DAGs are a fixed 4–5-stage
+composition, so lineage depth is bounded and recompute-on-executor-loss
+safety is worth keeping — unlike the unbounded iterative loops in
+``linkgraph`` where the *plan itself* grows with iteration count.
 """
 
 from __future__ import annotations
@@ -25,24 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: pins from the most recent persist_stages run; evicted on the next
-#: call (same single-live-cache policy as linkgraph/_LIVE_PR_CACHES)
-_LIVE_DAG_CACHES: list[DataFrame] = []
-
-
-def _pin(df: DataFrame, persist_stages: bool) -> DataFrame:
-    if not persist_stages:
-        return df
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_DAG_CACHES.append(df)
-    return df
-
-
-def _evict() -> None:
-    while _LIVE_DAG_CACHES:
-        _LIVE_DAG_CACHES.pop().unpersist()
+from gpi_etl_spark import runscope
 
 
 def curation_dag_v1(
@@ -59,8 +43,7 @@ def curation_dag_v1(
     from gpi_etl_spark.operators.curation import pack_budget_bins
     from gpi_etl_spark.queries import t
 
-    if persist_stages:
-        _evict()
+    pin = runscope.pin if persist_stages else (lambda df: df)
     docs = t(spark, sf_dir, "documents")
     toks = textstats.tokens("text")
     sw = F.array(*[F.lit(w) for w in textstats.STOPWORDS["en"]])
@@ -77,9 +60,8 @@ def curation_dag_v1(
         & (F.col("n_sw") * 5 <= F.col("n_tokens") * 3)
         & (F.col("rep_ratio") <= 0.5)
     )
-    hashed = _pin(
-        kept.withColumn("h", F.sha2(dedup.normalize_text("text"), 256)),
-        persist_stages,
+    hashed = pin(
+        kept.withColumn("h", F.sha2(dedup.normalize_text("text"), 256))
     )
     uniq = hashed.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
     docs2 = hashed.join(uniq, ["h", "doc_id"]).select(
@@ -111,30 +93,26 @@ def curation_dag_v2(
     from gpi_etl_spark.operators.textstats import gopher_quality_flags
     from gpi_etl_spark.queries import t
 
-    if persist_stages:
-        _evict()
+    pin = runscope.pin if persist_stages else (lambda df: df)
     docs = t(spark, sf_dir, "documents")
     heldout = docs.filter(F.col("doc_id") % 17 == 3)
     corpus = docs.filter(F.col("doc_id") % 17 != 3)
-    gated = _pin(
+    gated = pin(
         gopher_quality_flags(corpus, keep_cols=("lang",))
         .filter(F.col("pass_gopher"))
-        .join(docs.select("doc_id", "text"), "doc_id"),
-        persist_stages,
+        .join(docs.select("doc_id", "text"), "doc_id")
     )
     bad = curation.contaminated_ids(gated, heldout, n=4)
     clean = gated.join(bad, "doc_id", "left_anti")
-    hashed = _pin(
-        clean.withColumn("h", F.sha2(dedup.normalize_text("text"), 256)),
-        persist_stages,
+    hashed = pin(
+        clean.withColumn("h", F.sha2(dedup.normalize_text("text"), 256))
     )
     uniq = hashed.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
-    ded = _pin(
+    ded = pin(
         hashed.join(uniq, ["h", "doc_id"]).select(
             "doc_id", "lang",
             F.col("n_words").cast("int").alias("n_tokens"),
-        ),
-        persist_stages,
+        )
     )
     mixed = curation.temperature_mix(
         ded, group_col="lang", size_col="n_tokens", alpha=0.5, budget=150

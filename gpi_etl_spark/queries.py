@@ -29,6 +29,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gpi_etl_spark import runscope
 from gpi_etl_spark.functions.cleaning import clean_numeric_sentinels, horizontal_sum, safe_div
 from gpi_etl_spark.functions.dates import (
     month_name_expr,
@@ -64,84 +65,23 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
 
 
 def query(name: str, oracle: str | None = None):
+    """Register ``fn`` as a registry query. Dispatching it through
+    ``REGISTRY`` first drains the run scope (:func:`runscope.drain`):
+    every pin and checkpoint the previous registry query made is
+    released. So a registry frame is valid until the next registry
+    query is dispatched in the same process — execute it before
+    dispatching the next one."""
+
     def deco(fn: QueryFn) -> QueryFn:
         @functools.wraps(fn)
         def dispatched(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _evict_operator_caches()
+            runscope.drain()
             return fn(spark, sf_dir)
 
         REGISTRY[name] = (dispatched, oracle)
         return fn
 
     return deco
-
-
-def _evict_operator_caches() -> None:
-    """Release operator-level persists on every registry-query entry so
-    no pin — and no cached base-table derivative — survives from one
-    query invocation to the next: each bench/oracle run computes from
-    the parquet inputs and re-fills its own caches inside the timed
-    region. (The within-query reuse in similarity._kmeans_base is safe
-    exactly because of this hook.)
-
-    Round-13 (VERDICT r12 "what's wrong" #3): drain EVERY live-cache
-    registry, not just the kmeans one — a MEMORY_AND_DISK pin left by
-    query A otherwise stays resident while unrelated queries B…Z run
-    in the same process (the bench does exactly this), squeezing
-    execution memory for whichever query follows a heavy pinner
-    (guide §5 cache hygiene). Each operator still evicts its own
-    stale pins at its own entry; this hook is the cross-query
-    backstop."""
-    from gpi_etl_spark.operators import (
-        dedup as _dd,
-        heavyhitters as _hh,
-        hierarchy as _hr,
-        linkgraph as _lg,
-        logreg as _lr,
-        similarity as _sim,
-    )
-    from gpi_etl_spark.plans import curation_dags as _cd
-
-    registries = (
-        _LIVE_QUERY_CACHES,
-        _sim._LIVE_KMEANS_CACHES,
-        _dd._LIVE_SHINGLE_CACHES,
-        _dd._LIVE_SIG_CACHES,
-        _hh._LIVE_HH_CACHES,
-        _hr._LIVE_HIER_CACHES,
-        _lg._LIVE_PR_CACHES,
-        _lr._LIVE_LOGREG_CACHES,
-        _cd._LIVE_DAG_CACHES,
-    )
-    for reg in registries:
-        while reg:
-            reg.pop().unpersist()
-
-
-#: intra-query persist registry (round-12 optimization): queries whose
-#: plan consumes one expensive subtree from SEVERAL places pin it here
-#: for the run — the _LIVE_KMEANS_CACHES policy lifted to the query
-#: layer. The NEXT _evict_query_caches() call (i.e. the next such
-#: query, including the same query's next invocation) releases the
-#: pins, so nothing survives across bench/oracle invocations: every
-#: run still computes from the parquet inputs and re-fills its own
-#: cache inside the timed region.
-_LIVE_QUERY_CACHES: list[DataFrame] = []
-
-
-def _evict_query_caches() -> None:
-    while _LIVE_QUERY_CACHES:
-        _LIVE_QUERY_CACHES.pop().unpersist()
-
-
-def _qcache(df: DataFrame) -> DataFrame:
-    """Persist an intra-query reused frame MEMORY_AND_DISK and pin it
-    until the next :func:`_evict_query_caches`."""
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_QUERY_CACHES.append(df)
-    return df
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -9369,8 +9309,7 @@ def q188(spark, sf_dir):
     # probes' exact counts read from it instead of re-tokenizing the
     # corpus. Pinned: the sketch and truth subtrees of the one
     # returned plan would otherwise each re-run the explode.
-    _evict_query_caches()
-    freq = _qcache(
+    freq = runscope.pin(
         docs.select(F.explode(textstats.tokens("text")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -9868,13 +9807,12 @@ def q200(spark, sf_dir):
     # Round-13 (guide §1.2 don't recompute / §5): the text-feature
     # frame — tokenization + gopher flags + join, the query's dominant
     # per-row cost — is consumed FOUR times (standardizer aggregate,
-    # GD persist fill, isotonic binning, final selection); one _qcache
-    # pin pays the corpus text pass once and every consumer reads the
+    # GD persist fill, isotonic binning, final selection); one pin
+    # pays the corpus text pass once and every consumer reads the
     # narrow numeric cache. Values unchanged: a persist materializes
     # the same rows with the same partitioning, so every downstream
     # partial-sum order is identical.
-    _evict_query_caches()
-    frame = _qcache(
+    frame = runscope.pin(
         feats.join(flags, "doc_id").withColumn(
             "y", F.col("pass_gopher").cast("double")
         )
@@ -10346,11 +10284,10 @@ def q193(spark, sf_dir):
     feats = docs.select(
         "doc_id", textstats.cheap_quality_features("text").alias("q")
     ).select("doc_id", "q.*")
-    # Round-13: same _qcache rationale as q200 — the frame feeds the
+    # Round-13: same pin rationale as q200 — the frame feeds the
     # standardizer pass, the GD persist fill, and the scored
     # confusion aggregate (three corpus text passes collapse to one).
-    _evict_query_caches()
-    frame = _qcache(
+    frame = runscope.pin(
         feats.join(flags, "doc_id").withColumn(
             "y", F.col("pass_gopher").cast("double")
         )
@@ -11121,11 +11058,10 @@ def q209(spark, sf_dir):
     # Round-13 (the q200/q193 rationale): the tokenized frame — the
     # query's dominant per-row cost — is re-derived from parquet by
     # every training action (vocab distinct count, doc count, stats
-    # collect) AND the final scoring plan; one _qcache pin pays the
+    # collect) AND the final scoring plan; one runscope.pin pays the
     # corpus tokenization once (warm 2.31 s → 1.53 s at sf0.1).
     # Values unchanged: a persist materializes the same rows.
-    _evict_query_caches()
-    d = _qcache(
+    d = runscope.pin(
         docs.select(
             "doc_id",
             "lang",
@@ -11187,16 +11123,21 @@ def q210(spark, sf_dir):
     from gpi_etl_spark.operators.linkgraph import shortest_paths
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    cnt = docs.count()
+    # the node count as q192's lazy one-row cross join, not an eager
+    # count()
+    cnt = docs.agg(F.count(F.lit(1)).alias("cnt"))
+    dc = docs.crossJoin(cnt.hint("shuffle_replicate_nl"))
     base = F.col("doc_id") - F.col("doc_id") % 10
     ring_dst = base + ((F.col("doc_id") % 10) + 1) % 10
-    ring = docs.select(
+    ring = dc.select(
         F.col("doc_id").alias("src"),
-        F.when(ring_dst >= cnt, base).otherwise(ring_dst).alias("dst"),
+        F.when(ring_dst >= F.col("cnt"), base)
+        .otherwise(ring_dst)
+        .alias("dst"),
     )
-    bridge = docs.filter(F.col("doc_id") % 37 == 0).select(
+    bridge = dc.filter(F.col("doc_id") % 37 == 0).select(
         F.col("doc_id").alias("src"),
-        ((F.col("doc_id") + 10) % cnt).alias("dst"),
+        ((F.col("doc_id") + 10) % F.col("cnt")).alias("dst"),
     )
     seeds = docs.filter(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("node")
@@ -11415,9 +11356,9 @@ def _train_ivfadc(emb: DataFrame):
     two driver threads and each loop's per-job tail back-fills the
     other's idle executors (guide §2.6 overlap). Results are identical
     to the sequential form — both trainings are deterministic
-    functions of the corpus alone, and similarity._kmeans_base hands
-    both threads the same persisted (id, double-vec) projection under
-    a lock. Returns (coarse, assigned, books, codes)."""
+    functions of the corpus alone, and both threads' pins of the
+    (id, double-vec) projection (similarity._kmeans_base) share one
+    cached copy. Returns (coarse, assigned, books, codes)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from gpi_etl_spark.operators.similarity import (
@@ -11995,8 +11936,7 @@ def q221(spark, sf_dir):
     # the distinct stream feeds BOTH the register build and the exact
     # baseline — pin it for the run (round-12, the q238 policy;
     # unpinned, the dedup shuffle executed twice)
-    _evict_query_caches()
-    dist = _qcache(
+    dist = runscope.pin(
         t(spark, sf_dir, "events")
         .select(
             "event_type", F.col("user_id").cast("string").alias("uid")
@@ -13218,8 +13158,7 @@ def q238(spark, sf_dir):
     # the distinct triple stream feeds BOTH the register build and the
     # exact baseline — pin it for the run (round-12 optimization;
     # unpinned, the full dedup shuffle executed twice)
-    _evict_query_caches()
-    dist = _qcache(ev.distinct())
+    dist = runscope.pin(ev.distinct())
     sk = sketches.kmv_build(
         dist, "uid", group_cols=("event_type", "day"), k=64,
         hash_mode="poly",
@@ -13560,9 +13499,8 @@ def q241(spark, sf_dir):
     # builds (bit-identical counters — CMS linearity, pinned by
     # test); unpinned, each stream paid its scan twice (sketch +
     # truth).
-    _evict_query_caches()
-    fa = _qcache(va.groupBy("uid").agg(F.count(F.lit(1)).alias("na")))
-    fb = _qcache(vb.groupBy("uid").agg(F.count(F.lit(1)).alias("nb")))
+    fa = runscope.pin(va.groupBy("uid").agg(F.count(F.lit(1)).alias("na")))
+    fb = runscope.pin(vb.groupBy("uid").agg(F.count(F.lit(1)).alias("nb")))
     ka = cms_build_weighted(
         fa, "uid", "na", width=1024, depth=4, hash_mode="poly"
     )
@@ -13683,8 +13621,7 @@ def q242(spark, sf_dir):
     # task (the r9 measurement: 4.1 s vs 2.0 warm at sf0.1). Keyed,
     # so no pre-sort is paid; N is the session's parallelism, not a
     # local-mode constant.
-    _evict_query_caches()
-    d = _qcache(
+    d = runscope.pin(
         o.distinct().repartition(
             spark.sparkContext.defaultParallelism, *gcols, "cust"
         )
@@ -14704,8 +14641,7 @@ def q252(spark, sf_dir):
     # poly fold and ×k sign explode paid per DISTINCT key. Pinned:
     # the sketch and exact subtrees of the one returned plan would
     # otherwise each re-run the groupBy.
-    _evict_query_caches()
-    freq = _qcache(
+    freq = runscope.pin(
         ev.groupBy("event_type", "uid").agg(
             F.count(F.lit(1)).alias("f")
         )
@@ -15586,8 +15522,7 @@ def q261(spark, sf_dir):
     # counters (CMS linearity, pinned by test). Unpinned, every
     # sketch's corpus subtree re-ran once PER CANDIDATE PAIR it
     # prices — six events passes for three streams.
-    _evict_query_caches()
-    freq = _qcache(
+    freq = runscope.pin(
         ev.filter(
             F.col("user_id").isNotNull()
             & F.col("event_type").isin("view", "click", "purchase")
@@ -17171,10 +17106,9 @@ def q278(spark, sf_dir):
     # the projected key column feeds four jobs (per layout: the bounds
     # scalar + the routed write) — pin it for the writes (round-12
     # optimization; unpinned, lineitem was scanned four times), then
-    # release before returning: the writes below are EAGER, and the
-    # returned report reads the written files, not li
-    _evict_query_caches()
-    li = _qcache(
+    # drain the run scope: the writes below are EAGER, and the
+    # returned report reads only the written files
+    li = runscope.pin(
         t(spark, sf_dir, "lineitem").select(
             F.floor(F.col("l_extendedprice") * 100.0 + F.lit(0.5))
             .cast("bigint")
@@ -17197,7 +17131,7 @@ def q278(spark, sf_dir):
         ]
         for f in futs:
             f.result()
-    _evict_query_caches()
+    runscope.drain()
     zones = measure_zone_map(spark, paths["range"], "range").unionByName(
         measure_zone_map(spark, paths["hash"], "hash")
     )
@@ -17308,9 +17242,8 @@ def q279(spark, sf_dir):
     )
 
     # pin the projected dimensions for the four write-side jobs, the
-    # q278 rationale; released after the eager writes
-    _evict_query_caches()
-    li = _qcache(
+    # q278 rationale; the scope is drained after the eager writes
+    li = runscope.pin(
         t(spark, sf_dir, "lineitem").select(
             F.col("l_partkey").bitwiseAND(F.lit(1023))
             .cast("bigint")
@@ -17343,7 +17276,7 @@ def q279(spark, sf_dir):
         )
         fz.result()
         fx.result()
-    _evict_query_caches()
+    runscope.drain()
     zones = measure_zone_map_cols(
         spark, pz, "zorder", ("x", "y")
     ).unionByName(measure_zone_map_cols(spark, px, "range_x", ("x", "y")))
@@ -17688,8 +17621,7 @@ def q282(spark, sf_dir):
     # to hashing every row (CMS linearity, pinned by test). The fact
     # pin keeps the salted join from re-reading parquet; unpinned,
     # detection alone re-ran the scan + poly fold over every row.
-    _evict_query_caches()
-    li = _qcache(
+    li = runscope.pin(
         t(spark, sf_dir, "lineitem").select(
             F.when(F.col("l_linenumber") == 1, F.lit(0))
             .otherwise(F.col("l_orderkey") % 1000)
@@ -17700,7 +17632,7 @@ def q282(spark, sf_dir):
             .alias("qty"),
         )
     )
-    freq = _qcache(
+    freq = runscope.pin(
         li.groupBy("k").agg(F.count(F.lit(1)).cast("bigint").alias("_w"))
     )
     sk = cms_build_weighted(

@@ -76,41 +76,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "SparkSession"]:
-    """Read every testdata parquet in ``sf_dir`` and register temp views.
-
-    Returns {name: DataFrame}. Scans stay lazy; Catalyst prunes columns
-    and pushes filters into the parquet reader per-query.
-    """
-    names = [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    from pyspark.sql import functions as F
-
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            if name == "events":
-                # normalize ts across generator variants (see queries.t)
-                ts_type = dict(df.dtypes).get("ts")
-                if ts_type == "bigint":
-                    df = df.withColumn(
-                        "ts", F.timestamp_micros(F.expr("ts div 1000"))
-                    )
-                elif ts_type == "timestamp_ntz":
-                    df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

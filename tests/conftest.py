@@ -20,3 +20,13 @@ from gpi_etl_spark.session import get_spark
 def spark():
     s = get_spark("gpi_tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _drain_runscope():
+    """Start every test with an empty run scope: operators that tests
+    call directly leave their pins and checkpoints in it, and only a
+    registry dispatch drains it otherwise."""
+    from gpi_etl_spark import runscope
+
+    runscope.drain()

@@ -1,8 +1,8 @@
-"""Cross-query cache hygiene (round-13, VERDICT r12 "what's wrong" #3):
-the registry dispatcher must drain EVERY live-cache registry at query
-entry, so a MEMORY_AND_DISK pin left by one query cannot stay resident
-while unrelated queries run in the same process (the bench does exactly
-this — guide §5 cache hygiene)."""
+"""Cross-query cache hygiene: every pin and checkpoint a registry query
+makes goes through ``gpi_etl_spark.runscope``, and the scope's drain —
+run by the registry dispatcher when the next query is dispatched —
+leaves no persistent RDD behind, so nothing one query persisted stays
+resident while unrelated queries run in the same process."""
 
 from __future__ import annotations
 
@@ -13,77 +13,60 @@ def _n_persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
-def _force_unpersist_all(spark) -> None:
-    """Session-scoped fixture hygiene: earlier test modules leave
-    eager localCheckpoint RDDs behind (RDD-level persists that
-    ``catalog.clearCache()`` does NOT touch), so this test cannot
-    assume a clean baseline — drain everything via the JVM API before
-    asserting. Safe here: those RDDs belong to completed tests."""
-    sc = spark.sparkContext._jsc.sc()
-    it = sc.getPersistentRDDs().values().iterator()
-    while it.hasNext():
-        it.next().unpersist(True)
-
-
 def test_dispatcher_evicts_all_live_caches_between_queries(spark):
-    """Run pin-heavy registry queries back-to-back; at each next
-    query's ENTRY the previous query's pins must already be gone.
-    q282 fills _LIVE_QUERY_CACHES, q212 fills _LIVE_KMEANS_CACHES,
-    q105 fills _LIVE_DAG_CACHES, q200 fills _LIVE_LOGREG_CACHES —
-    four different registries, one shared eviction hook."""
-    from gpi_etl_spark.queries import REGISTRY, _evict_operator_caches
+    """Run pin- and checkpoint-heavy registry queries back to back;
+    after each, drain the scope the way the next dispatch does: no
+    persistent RDD may survive."""
+    from gpi_etl_spark import runscope
+    from gpi_etl_spark.queries import REGISTRY
 
-    # start clean (other tests in the session may have left pins —
-    # including localCheckpoint RDDs that clearCache cannot remove)
-    _evict_operator_caches()
-    spark.catalog.clearCache()
-    _force_unpersist_all(spark)
     assert _n_persistent_rdds(spark) == 0
-
     for name in (
+        # pins: query-level pins, the k-means base, the curation DAG's
+        # operators, the logreg feature frame
         "q282_adaptive_skew_join",
         "q212_ivfadc_ann",
         "q105_curation_dag",
         "q200_ml_curation_capstone",
+        # eager localCheckpoint loops, whose RDDs DataFrame.unpersist()
+        # does not release
+        "q192_kcore",
+        "q210_shortest_paths",
+        "q164_entity_resolution",
+        "q123_pagerank",
     ):
-        df = REGISTRY[name][0](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        # the NEXT dispatch is where eviction happens; emulate the
-        # bench's next-query entry and assert nothing survives it
-        _evict_operator_caches()
+        REGISTRY[name][0](spark, SF_DIR).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        runscope.drain()
         assert _n_persistent_rdds(spark) == 0, (
-            f"{name} left persistent RDDs after dispatcher eviction"
+            f"{name} left persistent RDDs after the scope drain"
         )
 
 
-def test_every_live_cache_registry_is_drained_by_the_hook():
-    """Structural guard: any NEW `_LIVE_*_CACHES` registry added to an
-    operator module must be wired into _evict_operator_caches — this
-    walks the package source for registry definitions and asserts the
-    hook names each one."""
-    import inspect
+def test_only_runscope_persists_or_checkpoints():
+    """Structural guard: no module of the package outside
+    ``runscope.py`` persists, caches or checkpoints a frame, so the
+    scope's drain sees every pin and checkpoint."""
     import os
     import re
 
     import gpi_etl_spark
-    from gpi_etl_spark import queries
 
     pkg_dir = os.path.dirname(gpi_etl_spark.__file__)
-    defined: set[str] = set()
+    pattern = re.compile(r"\.persist\(|\.cache\(\)|localCheckpoint\(")
+    offenders = []
     for root, _dirs, files in os.walk(pkg_dir):
         for fn in files:
-            if not fn.endswith(".py"):
+            path = os.path.join(root, fn)
+            if not fn.endswith(".py") or fn == "runscope.py":
                 continue
-            with open(os.path.join(root, fn)) as fh:
-                src = fh.read()
-            defined |= set(
-                re.findall(r"^(_LIVE_[A-Z0-9_]*CACHES)\s*[:=]", src, re.M)
-            )
-    hook_src = inspect.getsource(queries._evict_operator_caches)
-    missing = {
-        name for name in defined if name not in hook_src
-    }
-    assert not missing, (
-        f"live-cache registries not drained by _evict_operator_caches: "
-        f"{sorted(missing)}"
+            with open(path) as fh:
+                for i, line in enumerate(fh, 1):
+                    if pattern.search(line):
+                        offenders.append(
+                            f"{os.path.relpath(path, pkg_dir)}:{i}"
+                        )
+    assert not offenders, (
+        f"persist/cache/localCheckpoint outside runscope: {offenders}"
     )

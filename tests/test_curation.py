@@ -514,16 +514,13 @@ def test_curation_dag_persist_collapses_scans(spark):
     top-level plan consumes caches — every stage boundary resolves to
     an InMemoryTableScan, and at runtime those read cached blocks, not
     parquet."""
-    from gpi_etl_spark.plans.curation_dags import (
-        _LIVE_DAG_CACHES,
-        _evict,
-        curation_dag_v2,
-    )
+    from gpi_etl_spark import runscope
+    from gpi_etl_spark.plans.curation_dags import curation_dag_v2
 
-    # drop pins from any earlier persist run: the CacheManager matches
-    # cached plans by logical equality, so leftovers would make even
-    # the "lazy" variant read caches
-    _evict()
+    # the autouse fixture drained the scope, so no pin from an earlier
+    # persist run is left: the CacheManager matches cached plans by
+    # logical equality, so leftovers would make even the "lazy" variant
+    # read caches
     sf = "/root/testdata/sf0.001"
     lazy_plan = (
         curation_dag_v2(spark, sf, persist_stages=False)
@@ -538,8 +535,8 @@ def test_curation_dag_persist_collapses_scans(spark):
     )
     assert "InMemoryTableScan" in per_plan
     # all three pinned stages materialized and live
-    assert len(_LIVE_DAG_CACHES) == 3
-    assert all(df.is_cached for df in _LIVE_DAG_CACHES)
+    assert len(runscope._pins) == 3
+    assert all(df.is_cached for df in runscope._pins)
 
 
 def test_pps_sample_weight_proportionality(spark):

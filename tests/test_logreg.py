@@ -136,9 +136,17 @@ def test_empty_frame_raises(spark):
 
 
 def test_single_live_cache(spark):
+    # two fits of the same frame pin the same feature plan: the run
+    # scope records both pins, Spark keeps one cached copy, and the
+    # scope's drain releases it
+    from gpi_etl_spark import runscope
     from gpi_etl_spark.operators import logreg
 
+    jsc = spark.sparkContext._jsc.sc()
     df, _ = _toy_frame(spark, n=50)
     logreg.logreg_train(df, ["x1", "x2"], "y", iters=2, lr=1.0)
     logreg.logreg_train(df, ["x1", "x2"], "y", iters=2, lr=1.0)
-    assert len(logreg._LIVE_LOGREG_CACHES) == 1
+    assert len(runscope._pins) == 2
+    assert jsc.getPersistentRDDs().size() == 1
+    runscope.drain()
+    assert jsc.getPersistentRDDs().size() == 0

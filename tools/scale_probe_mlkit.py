@@ -24,6 +24,7 @@ sys.path.insert(0, "/root/repo")
 def probe(sf_dir: str) -> None:
     from pyspark.sql import functions as F
 
+    from gpi_etl_spark import runscope
     from gpi_etl_spark.operators import logreg
     from gpi_etl_spark.operators.evaluation import score_bins
     from gpi_etl_spark.operators.skyline import pareto_frontier_2d
@@ -54,10 +55,14 @@ def probe(sf_dir: str) -> None:
     # per-iteration aggregates (steady-state loop cost). One untimed
     # warm-up train first — the first call pays codegen/JIT for the
     # whole job family and would corrupt the 2-iteration point.
+    # Each timed train starts from an empty run scope, so it pays its
+    # own feature persist instead of reusing the previous train's pin.
     logreg.logreg_train(frame, _LOGREG_FEATURES, "y", iters=2, lr=2.0)
+    runscope.drain()
     t0 = time.time()
     model = logreg.logreg_train(frame, _LOGREG_FEATURES, "y", iters=2, lr=2.0)
     setup_plus2 = time.time() - t0
+    runscope.drain()
     t0 = time.time()
     model = logreg.logreg_train(frame, _LOGREG_FEATURES, "y", iters=8, lr=2.0)
     setup_plus8 = time.time() - t0
