@@ -410,7 +410,10 @@ def k_core(
     Otherwise the next degree table is the base symmetrized edge list
     semi-joined on both ends against the checkpoint's surviving nodes
     and re-aggregated — one checkpoint per round and a plan depth that
-    stays constant however many rounds run. ``max_rounds`` bounds the
+    stays constant however many rounds run. The symmetrized base is
+    pinned (:func:`gpi_etl_spark.runscope.pin`): round 1's checkpoint
+    job fills the pin, so later rounds neither rescan the input nor
+    redo the dedup shuffle. ``max_rounds`` bounds the
     DELETING rounds only — the final round (the one that observes the
     fixed point) is always free, so a graph that stabilizes in exactly
     ``max_rounds`` waves succeeds. Needing more deleting rounds than
@@ -426,7 +429,7 @@ def k_core(
     Deterministic: the fixed point of peeling is unique regardless of
     deletion order, so no tie-break is even needed.
     """
-    e = _symmetrize(edges, src_col, dst_col)
+    e = runscope.pin(_symmetrize(edges, src_col, dst_col))
 
     def degrees(sub: DataFrame) -> DataFrame:
         return sub.groupBy(F.col("src").alias("node")).agg(

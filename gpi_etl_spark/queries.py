@@ -28,6 +28,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gpi_etl_spark import runscope
 from gpi_etl_spark.functions.cleaning import clean_numeric_sentinels, horizontal_sum, safe_div
@@ -84,6 +85,31 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+#: table path -> ((files, nanosAsLong), raw parquet schema); see :func:`t`
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _files(path: str) -> tuple | None:
+    """``(relative path, mtime_ns, size)`` of every file under ``path``,
+    or of ``path`` itself when it is a file; None when ``path`` is not
+    on the local file system (a URI, a missing table)."""
+    if not os.path.exists(path):
+        return None
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_mtime_ns, st.st_size),)
+    files = []
+    for root, _dirs, names in os.walk(path):
+        for fn in names:
+            full = os.path.join(root, fn)
+            st = os.stat(full)
+            files.append(
+                (os.path.relpath(full, path), st.st_mtime_ns, st.st_size)
+            )
+    return tuple(sorted(files))
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table, normalizing the events ``ts`` column to
     a session-TZ TIMESTAMP regardless of how the generator wrote it:
@@ -92,13 +118,34 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       integer-divide to µs (truncation matches DuckDB's ns→µs cast);
     * TIMESTAMP_NTZ (isAdjustedToUTC=false µs) → cast to TIMESTAMP —
       value-preserving under the session's pinned UTC timezone, and
-      what the downstream epoch/window arithmetic expects."""
+      what the downstream epoch/window arithmetic expects.
+
+    The raw parquet schema (before the ``ts`` normalization) is cached
+    per process, one entry per table path, so a repeat read runs
+    ``spark.read.schema(s).parquet(path)`` and launches no
+    schema-inference job. The entry is keyed by the path's files
+    (each one's relative path, ``mtime_ns`` and size) and the
+    session's ``spark.sql.legacy.parquet.nanosAsLong`` value, taken
+    after the NANOS fallback has set it: when either differs — a
+    table rewritten in place, a session with the other conf value —
+    the schema is inferred again and replaces the entry. A path that
+    is not on the local file system is never cached."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+    files = _files(path)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == (
+        files, spark.conf.get(_NANOS_AS_LONG, "false")
+    ):
+        df = spark.read.schema(hit[1]).parquet(path)
+    else:
+        try:
+            df = spark.read.parquet(path)
+        except Exception:
+            spark.conf.set(_NANOS_AS_LONG, "true")
+            df = spark.read.parquet(path)
+        if files is not None:
+            key = (files, spark.conf.get(_NANOS_AS_LONG, "false"))
+            _SCHEMAS[path] = (key, df.schema)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -9402,18 +9449,23 @@ def q189(spark, sf_dir):
     from gpi_etl_spark.operators.linkgraph import label_propagation
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    cnt = docs.count()
+    # the node count as q192's lazy one-row cross join, not an eager
+    # count(); one pass over it emits each node's ring edge and, for
+    # every 37th node, its bridge edge (a ring/bridge union would plan
+    # the cross join twice)
+    cnt = docs.agg(F.count(F.lit(1)).alias("cnt"))
+    dc = docs.crossJoin(cnt.hint("shuffle_replicate_nl"))
     base = F.col("doc_id") - F.col("doc_id") % 10
     ring_dst = base + ((F.col("doc_id") % 10) + 1) % 10
-    ring = docs.select(
-        F.col("doc_id").alias("src"),
-        F.when(ring_dst >= cnt, base).otherwise(ring_dst).alias("dst"),
+    ring = F.when(ring_dst >= F.col("cnt"), base).otherwise(ring_dst)
+    bridge = F.when(
+        F.col("doc_id") % 37 == 0, (F.col("doc_id") + 10) % F.col("cnt")
     )
-    bridge = docs.filter(F.col("doc_id") % 37 == 0).select(
+    edges = dc.select(
         F.col("doc_id").alias("src"),
-        ((F.col("doc_id") + 10) % cnt).alias("dst"),
-    )
-    labels = label_propagation(ring.union(bridge), iters=4)
+        F.explode(F.array(ring, bridge)).alias("dst"),
+    ).filter(F.col("dst").isNotNull())
+    labels = label_propagation(edges, iters=4)
     return labels.select(
         F.col("node").cast("bigint").alias("node"),
         F.col("lbl").cast("bigint").alias("lbl"),

@@ -70,3 +70,63 @@ def test_only_runscope_persists_or_checkpoints():
     assert not offenders, (
         f"persist/cache/localCheckpoint outside runscope: {offenders}"
     )
+
+
+def test_only_t_reads_testdata_tables():
+    """Structural guard: no module of the package builds a
+    ``<sf_dir>/<table>.parquet`` path or hands ``sf_dir`` to a reader
+    except ``queries.t``, so every table read takes its cached schema
+    and its events-``ts`` normalization. Reads of files a query wrote
+    itself (landing dirs, stream sinks) do not name ``sf_dir``."""
+    import ast
+    import os
+
+    import gpi_etl_spark
+
+    def names_sf_dir(node):
+        return any(
+            isinstance(n, ast.Name) and n.id == "sf_dir" for n in ast.walk(node)
+        )
+
+    def has_parquet_literal(node):
+        return any(
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and ".parquet" in n.value
+            for n in ast.walk(node)
+        )
+
+    def is_reader_call(node):
+        return isinstance(node, ast.Call) and isinstance(
+            node.func, ast.Attribute
+        ) and node.func.attr in ("parquet", "load")
+
+    pkg_dir = os.path.dirname(gpi_etl_spark.__file__)
+    offenders = []
+    for root, _dirs, files in os.walk(pkg_dir):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, pkg_dir)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            skip = set()
+            if rel == "queries.py":
+                for node in tree.body:
+                    if isinstance(node, ast.FunctionDef) and node.name == "t":
+                        skip = {id(n) for n in ast.walk(node)}
+            for node in ast.walk(tree):
+                if id(node) in skip:
+                    continue
+                builds_path = isinstance(
+                    node, (ast.JoinedStr, ast.BinOp, ast.Call)
+                ) and names_sf_dir(node) and has_parquet_literal(node)
+                reads_sf_dir = is_reader_call(node) and any(
+                    names_sf_dir(a) for a in node.args
+                )
+                if builds_path or reads_sf_dir:
+                    offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, (
+        f"testdata table reads outside queries.t: {sorted(set(offenders))}"
+    )

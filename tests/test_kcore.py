@@ -74,9 +74,8 @@ def test_one_spark_action_per_peel_round(spark):
     # K4 + pendant chain, k=3: two rounds (one deleting, one observing
     # the fixed point), each ONE eager checkpoint whose own job carries
     # the below-k count — no symmetrize checkpoint, no per-round
-    # count(), no final re-aggregation. The previous shape (eager
-    # symmetrize checkpoint + count, count() per round, a re-aggregated
-    # result) took 18 jobs for the same call.
+    # count(), no final re-aggregation, and the pinned symmetrized base
+    # is filled by round 1's job, not rebuilt by round 2's.
     from gpi_etl_spark.operators.linkgraph import k_core
 
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
@@ -89,4 +88,4 @@ def test_one_spark_action_per_peel_round(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
