@@ -83,10 +83,10 @@ def enso_weekly(lines: DataFrame, year: int | None = None,
     dropped (:80), ddMONyyyy week → date, optional year filter (:86)."""
     out = parse_fixed_width(lines, _ENSO_WIDTHS, _ENSO_NAMES, skip_rows=4)
     out = out.drop("DEL1", "DEL2", "DEL3", "DEL4")
-    for c in out.columns:
-        if c != "WEEK":
-            out = out.withColumn(c, F.col(c).try_cast("double"))
-    out = out.withColumn("week_date", F.to_date("WEEK", "ddMMMyyyy"))
+    out = out.withColumns(
+        {c: F.col(c).try_cast("double") for c in out.columns if c != "WEEK"}
+        | {"week_date": F.to_date("WEEK", "ddMMMyyyy")}
+    )
     if year is not None:
         out = out.filter(F.year("week_date") == year)
     return _stamp(out, clock)
@@ -103,14 +103,12 @@ def inflation_long(
     June/July month map (:37-50,97), end-of-month date (:112),
     watermark filter (:100-102)."""
     months = [c for c in grid.columns if c != "Year"]
-    cleaned = grid
-    for m in months:
-        cleaned = cleaned.withColumn(
-            m,
-            F.when(F.trim(F.col(m)).isin("–", ""), None)
-            .otherwise(F.col(m))
-            .try_cast("double"),
-        )
+    cleaned = grid.withColumns({
+        m: F.when(F.trim(F.col(m)).isin("–", ""), None)
+        .otherwise(F.col(m))
+        .try_cast("double")
+        for m in months
+    })
     long = melt(cleaned, ["Year"], months, "Month", "Inflation").na.drop(
         subset=["Inflation"]
     )

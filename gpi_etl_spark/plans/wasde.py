@@ -162,8 +162,10 @@ def extract_supply_use(
         data, "geo", ["row_idx"], partition_by=["sheet"], out_col="Orden"
     )
 
-    for i, name in enumerate(VALUE_COLS, start=1):
-        data = data.withColumn(name, clean_numeric_sentinels(col(i), fill=0))
+    data = data.withColumns({
+        name: clean_numeric_sentinels(col(i), fill=0)
+        for i, name in enumerate(VALUE_COLS, start=1)
+    })
 
     total = F.col("Domestic total") + F.col("Exports")
     data = data.withColumn("Total Use", total).withColumn(

@@ -9430,6 +9430,28 @@ def _lpa_oracle_sql(iters: int) -> str:
     )
 
 
+def _ring_bridge_edges(docs):
+    """The planted ring-and-bridges graph of q189 and q210 as directed
+    ``(src, dst)`` edges over ``docs.doc_id``: a ring inside each block
+    of 10 ids (clipped to the node count) plus a bridge from every 37th
+    id to the id 10 ahead, modulo the node count. The node count is
+    q192's lazy one-row cross join, not an eager ``count()``, and one
+    pass over that join emits both edges of a node (a ring/bridge union
+    would plan the cross join twice)."""
+    cnt = docs.agg(F.count(F.lit(1)).alias("cnt"))
+    dc = docs.crossJoin(cnt.hint("shuffle_replicate_nl"))
+    base = F.col("doc_id") - F.col("doc_id") % 10
+    ring_dst = base + ((F.col("doc_id") % 10) + 1) % 10
+    ring = F.when(ring_dst >= F.col("cnt"), base).otherwise(ring_dst)
+    bridge = F.when(
+        F.col("doc_id") % 37 == 0, (F.col("doc_id") + 10) % F.col("cnt")
+    )
+    return dc.select(
+        F.col("doc_id").alias("src"),
+        F.explode(F.array(ring, bridge)).alias("dst"),
+    ).filter(F.col("dst").isNotNull())
+
+
 @query("q189_label_propagation", _lpa_oracle_sql(iters=4))
 def q189(spark, sf_dir):
     """Community detection via deterministic synchronous label
@@ -9449,23 +9471,7 @@ def q189(spark, sf_dir):
     from gpi_etl_spark.operators.linkgraph import label_propagation
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    # the node count as q192's lazy one-row cross join, not an eager
-    # count(); one pass over it emits each node's ring edge and, for
-    # every 37th node, its bridge edge (a ring/bridge union would plan
-    # the cross join twice)
-    cnt = docs.agg(F.count(F.lit(1)).alias("cnt"))
-    dc = docs.crossJoin(cnt.hint("shuffle_replicate_nl"))
-    base = F.col("doc_id") - F.col("doc_id") % 10
-    ring_dst = base + ((F.col("doc_id") % 10) + 1) % 10
-    ring = F.when(ring_dst >= F.col("cnt"), base).otherwise(ring_dst)
-    bridge = F.when(
-        F.col("doc_id") % 37 == 0, (F.col("doc_id") + 10) % F.col("cnt")
-    )
-    edges = dc.select(
-        F.col("doc_id").alias("src"),
-        F.explode(F.array(ring, bridge)).alias("dst"),
-    ).filter(F.col("dst").isNotNull())
-    labels = label_propagation(edges, iters=4)
+    labels = label_propagation(_ring_bridge_edges(docs), iters=4)
     return labels.select(
         F.col("node").cast("bigint").alias("node"),
         F.col("lbl").cast("bigint").alias("lbl"),
@@ -11175,28 +11181,10 @@ def q210(spark, sf_dir):
     from gpi_etl_spark.operators.linkgraph import shortest_paths
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    # the node count as q192's lazy one-row cross join, not an eager
-    # count()
-    cnt = docs.agg(F.count(F.lit(1)).alias("cnt"))
-    dc = docs.crossJoin(cnt.hint("shuffle_replicate_nl"))
-    base = F.col("doc_id") - F.col("doc_id") % 10
-    ring_dst = base + ((F.col("doc_id") % 10) + 1) % 10
-    ring = dc.select(
-        F.col("doc_id").alias("src"),
-        F.when(ring_dst >= F.col("cnt"), base)
-        .otherwise(ring_dst)
-        .alias("dst"),
-    )
-    bridge = dc.filter(F.col("doc_id") % 37 == 0).select(
-        F.col("doc_id").alias("src"),
-        ((F.col("doc_id") + 10) % F.col("cnt")).alias("dst"),
-    )
     seeds = docs.filter(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("node")
     )
-    out = shortest_paths(
-        ring.union(bridge), seeds, max_depth=12
-    )
+    out = shortest_paths(_ring_bridge_edges(docs), seeds, max_depth=12)
     return out.select("node", F.col("dist").cast("int").alias("dist"))
 
 

@@ -2,8 +2,13 @@
 
 Each reference source is a small external payload (KB-MB) fetched over
 HTTP — that part is inherently driver-side and is NOT where Spark adds
-value; the connector's contract is "fetch → parse → ``createDataFrame``
-conforming to a declared schema". Every connector takes a ``fetch``
+value; the connector's contract is "fetch → parse → a DataFrame
+conforming to a declared schema". The parsed rows reach Spark through
+``sources.local.local_frame`` as a typed Arrow table, which Spark keeps
+as a JVM ``LocalRelation`` below
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) and
+parallelizes in the JVM above it; either way no action on the frame
+starts a Python-worker task. Every connector takes a ``fetch``
 callable (url → bytes/str) so tests inject recorded fixtures and no
 code path touches the network in CI. Credentials come from a config
 mapping, never source literals (the reference hard-codes them —
@@ -26,6 +31,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from gpi_etl_spark.sources.local import local_frame
 
 Fetch = Callable[[str], bytes]
 
@@ -64,7 +71,8 @@ def http_csv(
     columns: Sequence[str] | None = None,
     limiter: RateLimiter | None = None,
 ) -> DataFrame:
-    """S1/S10: CSV-over-HTTP → DataFrame.
+    """S1/S10: CSV-over-HTTP → DataFrame. ``schema`` is a ``StructType``
+    or a DDL string; without one every column is a nullable string.
 
     For landed multi-GB CSV datasets use ``spark.read.csv(path,
     schema=...)`` instead — this connector is for small live feeds.
@@ -74,7 +82,9 @@ def http_csv(
     cols = list(columns) if columns else header
     idx = [header.index(c) for c in cols]
     data = [[r[i] if i < len(r) else None for i in idx] for r in rows]
-    return spark.createDataFrame(data, schema=schema or cols)
+    if schema is None:
+        schema = T.StructType([T.StructField(c, T.StringType()) for c in cols])
+    return local_frame(spark, data, schema)
 
 
 def zipped_member(payload: bytes, suffix: str = ".xls") -> bytes:
@@ -100,6 +110,11 @@ def json_api(
     walk, HTGPISNP500/__init__.py:81-92). For large JSON *datasets* use
     ``spark.read.json`` with an explicit schema + ``from_json``/
     ``explode`` instead.
+
+    The one connector left on ``createDataFrame(list)``: with
+    ``schema=None`` PySpark's Python inference decides map vs struct
+    for nested objects and the local-time reading of datetimes, and an
+    Arrow table would decide both differently.
     """
     (limiter or RateLimiter()).wait()
     doc = json.loads(fetch(url))
@@ -262,7 +277,7 @@ def html_table(
     schema = T.StructType(
         [T.StructField(c, T.StringType()) for c in _dedupe(header)]
     )
-    return spark.createDataFrame(data, schema=schema)
+    return local_frame(spark, data, schema)
 
 
 def _dedupe(names: Sequence[str]) -> list[str]:

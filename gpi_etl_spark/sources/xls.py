@@ -512,12 +512,14 @@ def xls_cells_df(
 ):
     """Sheet → the engine's ``wasde_cells`` shape
     ``(sheet, row_idx, col_idx, value)``."""
+    from gpi_etl_spark.sources.local import local_frame
+
     wb = _Workbook(payload)
     name = sheet_name or wb.sheets[0][0]
     rows = [
         (name, r, c, v)
         for (r, c), v in sorted(wb.cells(sheet_name, fill_merged).items())
     ]
-    return spark.createDataFrame(
-        rows, "sheet string, row_idx int, col_idx int, value string"
+    return local_frame(
+        spark, rows, "sheet string, row_idx int, col_idx int, value string"
     )

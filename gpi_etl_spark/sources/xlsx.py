@@ -227,6 +227,8 @@ def xlsx_cells_df(spark, payload: bytes, sheet_name: str | None = None):
     """Sheet → the engine's ``wasde_cells`` shape
     ``(sheet, row_idx, col_idx, value)`` — absent cells omitted, ready
     for ``plans.wasde.extract_supply_use`` / ``extract_wheat_classes``."""
+    from gpi_etl_spark.sources.local import local_frame
+
     name = sheet_name or (sheet_names(payload) or [""])[0]
     grid = parse_xlsx_cells(payload, sheet_name)
     rows = [
@@ -235,6 +237,6 @@ def xlsx_cells_df(spark, payload: bytes, sheet_name: str | None = None):
         for c, v in enumerate(line)
         if v is not None
     ]
-    return spark.createDataFrame(
-        rows, "sheet string, row_idx int, col_idx int, value string"
+    return local_frame(
+        spark, rows, "sheet string, row_idx int, col_idx int, value string"
     )

@@ -1,3 +1,6 @@
+import time
+import uuid
+
 import pytest
 
 try:
@@ -30,3 +33,31 @@ def _drain_runscope():
     from gpi_etl_spark import runscope
 
     runscope.drain()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` → the Spark jobs ``fn`` launches, counted in
+    a job group. A one-job fence in a second group runs after ``fn``;
+    the status store sees jobs in launch order, so once it shows the
+    fence it shows all of ``fn``'s jobs."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group, fence = (f"count-jobs-{uuid.uuid4().hex}" for _ in range(2))
+        try:
+            sc.setJobGroup(group, "job count")
+            fn()
+            sc.setJobGroup(fence, "fence")
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(fence):
+            assert time.monotonic() < deadline, "fence job never reported"
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group))
+
+    return count

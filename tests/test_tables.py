@@ -5,9 +5,6 @@ paths, and the cache keeps one entry per table path."""
 
 from __future__ import annotations
 
-import time
-import uuid
-
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -23,35 +20,12 @@ def schemas(monkeypatch):
     return cache
 
 
-def _jobs(spark, fn) -> int:
-    """Jobs ``fn`` launches, counted in a job group. A one-job fence
-    in a second group runs after ``fn``; the status store sees jobs in
-    launch order, so once it shows the fence it shows all of ``fn``'s
-    jobs."""
-    sc = spark.sparkContext
-    group, fence = (f"tables-{uuid.uuid4().hex}" for _ in range(2))
-    try:
-        sc.setJobGroup(group, "t() job count")
-        fn()
-        sc.setJobGroup(fence, "fence")
-        spark.range(1).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(fence):
-        assert time.monotonic() < deadline, "fence job never reported"
-        time.sleep(0.05)
-    return len(tracker.getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", ["documents", "events"])
-def test_second_read_launches_no_job(spark, schemas, name):
+def test_second_read_launches_no_job(spark, schemas, count_jobs, name):
     from gpi_etl_spark.queries import t
 
-    assert _jobs(spark, lambda: t(spark, SF_DIR, name)) >= 1
-    assert _jobs(spark, lambda: t(spark, SF_DIR, name)) == 0
+    assert count_jobs(lambda: t(spark, SF_DIR, name)) >= 1
+    assert count_jobs(lambda: t(spark, SF_DIR, name)) == 0
 
 
 @pytest.mark.parametrize("layout", ["file", "dir"])
@@ -117,7 +91,7 @@ def test_events_ts_is_timestamp_cached_and_uncached(spark, schemas, nanos_sf, wh
         assert [r.ts.microsecond for r in rows] == [123456] * 3
 
 
-def test_other_nanos_conf_value_reinfers(spark, schemas, nanos_sf):
+def test_other_nanos_conf_value_reinfers(spark, schemas, nanos_sf, count_jobs):
     """A session whose ``nanosAsLong`` differs from the one the schema
     was inferred under infers it again instead of reusing it."""
     from gpi_etl_spark.queries import _NANOS_AS_LONG, t
@@ -126,9 +100,9 @@ def test_other_nanos_conf_value_reinfers(spark, schemas, nanos_sf):
     try:
         spark.conf.set(_NANOS_AS_LONG, "false")
         t(spark, nanos_sf, "events")  # falls back to nanosAsLong=true
-        assert _jobs(spark, lambda: t(spark, nanos_sf, "events")) == 0
+        assert count_jobs(lambda: t(spark, nanos_sf, "events")) == 0
         spark.conf.set(_NANOS_AS_LONG, "false")
-        assert _jobs(spark, lambda: t(spark, nanos_sf, "events")) >= 1
+        assert count_jobs(lambda: t(spark, nanos_sf, "events")) >= 1
         df = t(spark, nanos_sf, "events")
         assert dict(df.dtypes)["ts"] == "timestamp"
         assert len(df.collect()) == 3
