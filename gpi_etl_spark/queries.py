@@ -217,6 +217,27 @@ def stream_events(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return land_and_stream(spark, t(spark, sf_dir, "events"), name, sf_dir)
 
 
+def _stream_to_state(
+    spark: SparkSession, sf_dir: str, tag: str, src: DataFrame, attach
+) -> str:
+    """Stream ``src`` through the foreachBatch sink that
+    ``attach(stream, table, checkpoint)`` starts, until the landing is
+    consumed, and return the state table's path. The table and its
+    checkpoint live under the ``tag`` landing root and are reset first,
+    so each gated run is a fresh ingest, not a checkpoint resume; the
+    source lands under ``<tag>src`` (see land_and_stream)."""
+    from gpi_etl_spark.streaming.sinks import reset
+
+    root = _landing(spark, tag, sf_dir)
+    table, ckpt = root + "/state", root + "/ckpt"
+    reset(spark, table)
+    reset(spark, ckpt)
+    q = attach(land_and_stream(spark, src, tag + "src", sf_dir), table, ckpt)
+    q.processAllAvailable()
+    q.stop()
+    return table
+
+
 #: landing dirs created by THIS process — removed at interpreter exit
 #: so repeated CI/gate/bench sessions don't accumulate parquet copies
 #: in the temp dir (each new session writes fresh app-id-keyed paths).
@@ -11389,28 +11410,45 @@ SELECT query_id, vec_id, round(score, 6) AS score, rank
 FROM rr WHERE rank <= {refine_k}"""
 
 
+def _in_parallel(spark: SparkSession, *calls: Callable[[], object]) -> list:
+    """Run each zero-argument call on its own driver thread and return
+    the results in call order. Independent eager chains overlap: each
+    one's per-job tail back-fills the other's idle executors. Every
+    thread inherits the calling thread's Spark local properties (job
+    group, job description) and ``spark``'s job tags, so a per-query
+    job count sees its jobs."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        # one wrapper per call: each thread gets its own copy of the
+        # properties, which Spark mutates per SQL execution
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(c)) for c in calls
+        ]
+        return [f.result() for f in futs]
+
+
 def _train_ivfadc(emb: DataFrame):
     """The q212/q222 IVFADC training front half: the coarse Lloyd loop
     (k=8, iters=4) and the PQ trainer (m=4, k=8, iters=3) are
-    INDEPENDENT iteration chains over the same corpus, so they run on
-    two driver threads and each loop's per-job tail back-fills the
-    other's idle executors (guide §2.6 overlap). Results are identical
-    to the sequential form — both trainings are deterministic
-    functions of the corpus alone, and both threads' pins of the
-    (id, double-vec) projection (similarity._kmeans_base) share one
-    cached copy. Returns (coarse, assigned, books, codes)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    INDEPENDENT iteration chains over the same corpus, so they run in
+    parallel (:func:`_in_parallel`). Results are identical to the
+    sequential form — both trainings are deterministic functions of
+    the corpus alone, and both threads' pins of the (id, double-vec)
+    projection (similarity._kmeans_base) share one cached copy.
+    Returns (coarse, assigned, books, codes)."""
     from gpi_etl_spark.operators.similarity import (
         distributed_kmeans,
         pq_train,
     )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_dk = pool.submit(distributed_kmeans, emb, 8, 4)
-        fut_pq = pool.submit(pq_train, emb, 4, 8, 3)
-        coarse, assigned = fut_dk.result()
-        books, codes = fut_pq.result()
+    (coarse, assigned), (books, codes) = _in_parallel(
+        emb.sparkSession,
+        functools.partial(distributed_kmeans, emb, 8, 4),
+        functools.partial(pq_train, emb, 4, 8, 3),
+    )
     return coarse, assigned, books, codes
 
 
@@ -12517,30 +12555,27 @@ def q230(spark, sf_dir):
     their timestamps strictly exceed the loaded rows', so no batch
     split can change any per-key winner
     (tests/test_streaming_delivery.py runs this gate under the 8-file
-    split). Live-table and checkpoint dirs are cleared per run — each
-    gated run is a fresh ingest, not a checkpoint resume."""
-    import shutil
-
+    split). Each gated run is a fresh ingest, not a checkpoint
+    resume."""
     from gpi_etl_spark.streaming.sinks import stream_upsert, upsert_batch
 
     ev = t(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts", "value"
     )
-    root = _landing(spark, "q230", sf_dir)
-    table, ckpt = root + "/table", root + "/ckpt"
-    for d in (table, table + "__staging", table + "__old", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    upsert_batch(spark, ev, table, ["event_id"], "ts")
     revs = ev.filter(F.col("event_id") % 5 == 0).select(
         "event_id",
         "event_type",
         (F.col("ts") + F.expr("INTERVAL 1 DAY")).alias("ts"),
         (F.col("value") + F.lit(1000.0)).alias("value"),
     )
-    stream = land_and_stream(spark, revs, "q230src", sf_dir)
-    q = stream_upsert(stream, table, ["event_id"], "ts", checkpoint=ckpt)
-    q.processAllAvailable()
-    q.stop()
+
+    def attach(stream, table, ckpt):
+        upsert_batch(spark, ev, table, ["event_id"], "ts")
+        return stream_upsert(
+            stream, table, ["event_id"], "ts", checkpoint=ckpt
+        )
+
+    table = _stream_to_state(spark, sf_dir, "q230", revs, attach)
     final = spark.read.parquet(table)
     return final.filter(F.col("event_id") % 17 == 0).select(
         "event_id",
@@ -14173,27 +14208,20 @@ def q247(spark, sf_dir):
     keep warm forever, and the same table q238 windows and q242
     rolls up. exact_users rides along; fam rides the state so a
     checkpoint straddling a kmv_build family upgrade dies loudly at
-    the first merge. State/checkpoint dirs are cleared per run —
-    each gated run is a fresh ingest."""
-    import shutil
-
+    the first merge. Each gated run is a fresh ingest."""
     from gpi_etl_spark.operators import sketches
     from gpi_etl_spark.streaming.sinks import stream_kmv
 
     ev = t(spark, sf_dir, "events").select(
         "event_type", F.col("user_id").cast("string").alias("uid")
     )
-    root = _landing(spark, "q247", sf_dir)
-    table, ckpt = root + "/regs", root + "/ckpt"
-    for d in (table, table + "__staging", table + "__old", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    stream = land_and_stream(spark, ev, "q247src", sf_dir)
-    q = stream_kmv(
-        stream, table, "uid", checkpoint=ckpt,
-        group_cols=("event_type",), k=64, hash_mode="poly",
+    table = _stream_to_state(
+        spark, sf_dir, "q247", ev,
+        lambda stream, table, ckpt: stream_kmv(
+            stream, table, "uid", checkpoint=ckpt,
+            group_cols=("event_type",), k=64, hash_mode="poly",
+        ),
     )
-    q.processAllAvailable()
-    q.stop()
     regs = spark.read.parquet(table)
     est = sketches.kmv_estimate(regs, ("event_type",))
     exact = ev.groupBy("event_type").agg(
@@ -14271,8 +14299,6 @@ def q248(spark, sf_dir):
     never-undercount overcount ≥ 0; whole row int64, poly family —
     DuckDB replays buckets, counters, probe walk and checksum
     bit-exactly."""
-    import shutil
-
     from gpi_etl_spark.operators.sketches import cms_build, cms_estimate
     from gpi_etl_spark.streaming.sinks import cms_state, stream_cms
 
@@ -14284,17 +14310,13 @@ def q248(spark, sf_dir):
         )
         .select("user_id", F.col("user_id").cast("string").alias("uid"))
     )
-    root = _landing(spark, "q248", sf_dir)
-    table, ckpt = root + "/ctrs", root + "/ckpt"
-    for d in (table, table + "__staging", table + "__old", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    stream = land_and_stream(spark, v, "q248src", sf_dir)
-    q = stream_cms(
-        stream, table, "uid", checkpoint=ckpt, width=W, depth=D,
-        hash_mode="poly",
+    table = _stream_to_state(
+        spark, sf_dir, "q248", v,
+        lambda stream, table, ckpt: stream_cms(
+            stream, table, "uid", checkpoint=ckpt, width=W, depth=D,
+            hash_mode="poly",
+        ),
     )
-    q.processAllAvailable()
-    q.stop()
     regs = cms_state(spark, table)
     probes = v.filter(F.col("user_id") % 7 == 0).select(
         "user_id", "uid"
@@ -15232,8 +15254,6 @@ def q258(spark, sf_dir):
     F₂ readout from the streamed state. Delivery adversaries
     (replay, crash-mid-swap) are pinned in tests/test_stream_upsert
     and the 11-gate harness in tests/test_streaming_delivery."""
-    import shutil
-
     from gpi_etl_spark.functions.xhash import P
     from gpi_etl_spark.operators.sketches import ams_f2
     from gpi_etl_spark.streaming.sinks import ams_state, stream_ams
@@ -15246,16 +15266,12 @@ def q258(spark, sf_dir):
         )
         .select("user_id", F.col("user_id").cast("string").alias("uid"))
     )
-    root = _landing(spark, "q258", sf_dir)
-    table, ckpt = root + "/comps", root + "/ckpt"
-    for d in (table, table + "__staging", table + "__old", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    stream = land_and_stream(spark, v, "q258src", sf_dir)
-    q = stream_ams(
-        stream, table, "uid", checkpoint=ckpt, k=K, hash_mode="poly"
+    table = _stream_to_state(
+        spark, sf_dir, "q258", v,
+        lambda stream, table, ckpt: stream_ams(
+            stream, table, "uid", checkpoint=ckpt, k=K, hash_mode="poly"
+        ),
     )
-    q.processAllAvailable()
-    q.stop()
     comps = ams_state(spark, table)
     est = ams_f2(comps)
     exact = (
@@ -15741,8 +15757,6 @@ def q263(spark, sf_dir):
     stream — any ledger fault (double-fold, dropped batch) breaks the
     integer sums. Delivery adversaries pinned in
     tests/test_stream_upsert."""
-    import shutil
-
     from gpi_etl_spark.streaming.sinks import agg_state, stream_agg_view
 
     v = (
@@ -15755,16 +15769,12 @@ def q263(spark, sf_dir):
             .alias("cents"),
         )
     )
-    root = _landing(spark, "q263", sf_dir)
-    table, ckpt = root + "/aggs", root + "/ckpt"
-    for d in (table, table + "__staging", table + "__old", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    stream = land_and_stream(spark, v, "q263src", sf_dir)
-    q = stream_agg_view(
-        stream, table, "event_type", "cents", checkpoint=ckpt
+    table = _stream_to_state(
+        spark, sf_dir, "q263", v,
+        lambda stream, table, ckpt: stream_agg_view(
+            stream, table, "event_type", "cents", checkpoint=ckpt
+        ),
     )
-    q.processAllAvailable()
-    q.stop()
     st = agg_state(spark, table)
     return st.select(
         F.col("g").alias("event_type"),
@@ -16630,8 +16640,6 @@ def q273(spark, sf_dir):
     streamed twin (accumulating weights re-order priorities — not
     maintainable from bounded state; documented on the sink).
     Reference seat: none (no streaming of any kind)."""
-    import shutil
-
     from gpi_etl_spark.streaming.sinks import (
         sample_state,
         stream_key_sample,
@@ -16644,22 +16652,13 @@ def q273(spark, sf_dir):
             "event_type", F.col("user_id").cast("string").alias("uid")
         )
     )
-    root = _landing(spark, "q273", sf_dir)
-    table, ckpt = root + "/sample", root + "/ckpt"
-    for d in (table, table + "__staging", table + "__old", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    stream = land_and_stream(spark, v, "q273src", sf_dir)
-    q = stream_key_sample(
-        stream,
-        table,
-        "uid",
-        checkpoint=ckpt,
-        k=32,
-        group_cols=("event_type",),
-        hash_mode="poly",
+    table = _stream_to_state(
+        spark, sf_dir, "q273", v,
+        lambda stream, table, ckpt: stream_key_sample(
+            stream, table, "uid", checkpoint=ckpt, k=32,
+            group_cols=("event_type",), hash_mode="poly",
+        ),
     )
-    q.processAllAvailable()
-    q.stop()
     return sample_state(spark, table).select("event_type", "uid", "pri")
 
 
@@ -17160,17 +17159,11 @@ def q278(spark, sf_dir):
         layout: _os.path.join(landing, layout)
         for layout in ("range", "hash")
     }
-    # independent eager writes to distinct paths → two driver threads
-    # (guide §2.6 overlap; the q212 trainer pattern), identical files
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(write_zone_layout, li, "cents", 64, layout, path)
-            for layout, path in paths.items()
-        ]
-        for f in futs:
-            f.result()
+    # independent eager writes to distinct paths, identical files
+    _in_parallel(spark, *(
+        functools.partial(write_zone_layout, li, "cents", 64, layout, path)
+        for layout, path in paths.items()
+    ))
     runscope.drain()
     zones = measure_zone_map(spark, paths["range"], "range").unionByName(
         measure_zone_map(spark, paths["hash"], "hash")
@@ -17301,21 +17294,18 @@ def q279(spark, sf_dir):
     pz = _os.path.join(landing, "zorder")
     px = _os.path.join(landing, "range_x")
     # the two layout writes are independent eager jobs over the same
-    # pinned projection → two driver threads (guide §2.6 overlap; the
-    # q212 trainer pattern); distinct output paths, identical files
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fz = pool.submit(
+    # pinned projection; distinct output paths, identical files
+    _in_parallel(
+        spark,
+        functools.partial(
             write_zone_layout, zc, "zk", 64, "range", pz,
             carry_cols=("x", "y"),
-        )
-        fx = pool.submit(
+        ),
+        functools.partial(
             write_zone_layout, xc, "xk", 64, "range", px,
             carry_cols=("x", "y"),
-        )
-        fz.result()
-        fx.result()
+        ),
+    )
     runscope.drain()
     zones = measure_zone_map_cols(
         spark, pz, "zorder", ("x", "y")
@@ -17790,8 +17780,6 @@ def q283(spark, sf_dir):
     one-shot aggregation — plus the median/p90/p99 walk, all
     replayed in DuckDB. Reference seat: none (no streaming, no
     quantiles)."""
-    import shutil
-
     from gpi_etl_spark.operators.sketches import rq_build, rq_quantiles
     from gpi_etl_spark.streaming.sinks import rq_state, stream_rq
 
@@ -17804,14 +17792,12 @@ def q283(spark, sf_dir):
             .alias("cents")
         )
     )
-    root = _landing(spark, "q283", sf_dir)
-    table, ckpt = root + "/buckets", root + "/ckpt"
-    for d in (table, table + "__staging", table + "__old", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    stream = land_and_stream(spark, v, "q283src", sf_dir)
-    q = stream_rq(stream, table, "cents", checkpoint=ckpt, digits=3)
-    q.processAllAvailable()
-    q.stop()
+    table = _stream_to_state(
+        spark, sf_dir, "q283", v,
+        lambda stream, table, ckpt: stream_rq(
+            stream, table, "cents", checkpoint=ckpt, digits=3
+        ),
+    )
     st = rq_state(spark, table)
     quant = rq_quantiles(st, (), ((1, 2), (9, 10), (99, 100)))
     direct = rq_build(v, "cents", (), 3)

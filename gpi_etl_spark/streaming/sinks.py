@@ -1,20 +1,40 @@
-"""Streaming sinks: foreachBatch upsert into a keyed parquet table.
+"""Streaming sinks: foreachBatch folds into a maintained parquet state table.
 
 Structured Streaming's built-in file sink is append-only; the
-reference's pipelines need *upsert* semantics (re-delivered or revised
-rows replace earlier ones — the J1 watermark pattern, SURVEY §2.3).
-``foreachBatch`` is the sanctioned bridge: each micro-batch arrives as
-a batch DataFrame and any batch writer — here last-write-wins dedup
-into parquet, on a lakehouse a real ``MERGE INTO`` — applies it
-transactionally per batch id.
+reference's pipelines need state that each micro-batch updates in
+place — upsert semantics on the high-watermark tables (the J1
+watermark pattern, SURVEY §2.3) and sketch or aggregate tables kept
+current as data streams through. ``foreachBatch`` is the bridge: each
+micro-batch arrives as a batch DataFrame, and every sink here folds it
+into its table through one protocol (:func:`_fold`):
+
+1. **recover** — heal a swap that a crash interrupted;
+2. **read state** — the live table, or none on the first fold;
+3. **stamp guard** — a state built with another geometry (k, hash
+   family, width/depth, digits) raises before anything merges;
+4. **replay skip** — sinks whose merge is not idempotent (CMS, AMS,
+   agg view, rq) keep an applied-batch ledger inside the table and
+   skip a ``batch_id`` they already folded, which makes an
+   at-least-once replay exactly-once;
+5. **merge** — the sink's own algebra;
+6. **staged swap** — the merged table is written to ``<path>__staging``
+   and renamed live (:func:`_swap_in`).
+
+Only this module knows the ``__staging``/``__old`` swap dirs;
+:func:`reset` deletes a table together with them. Every ``stream_*``
+attacher runs its fold on each micro-batch with an ``availableNow``
+trigger (:func:`_attach`) and returns the started StreamingQuery.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from gpi_etl_spark.sources.local import local_frame
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -27,10 +47,27 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, jvm.org.apache.hadoop.fs.Path, jpath
 
 
+def _swap_dirs(Path, base: str):
+    """The (staging, retired) dirs of the table at ``base``."""
+    return Path(base + "__staging"), Path(base + "__old")
+
+
+def reset(spark: SparkSession, path: str) -> None:
+    """Delete the table at ``path`` and its swap dirs, so the next fold
+    starts from empty state. A checkpoint dir, which has no swap dirs,
+    is deleted the same way."""
+    base = path.rstrip("/")
+    fs, Path, live = _hadoop_fs(spark, base)
+    for d in (live, *_swap_dirs(Path, base)):
+        fs.delete(d, True)
+
+
 def _is_committed(fs, Path, d) -> bool:
     """A staging dir is promotable only when its write committed (the
     parquet job's ``_SUCCESS`` marker is present)."""
-    return bool(fs.exists(d)) and bool(fs.exists(Path(d.toString() + "/_SUCCESS")))
+    return bool(fs.exists(d)) and bool(
+        fs.exists(Path(d.toString() + "/_SUCCESS"))
+    )
 
 
 def _recover(fs, Path, live, staged, old) -> None:
@@ -56,14 +93,14 @@ def _promote_staged(fs, staged, live) -> None:
 
 
 def _swap_in(df: DataFrame, fs, live, staged, old, base: str) -> None:
-    """Materialize ``df`` to the staging dir, then atomically swap it
-    live: retire live → promote staged → rollback on failure → clean
-    up the retired copy. The ONE copy of the recovery-critical swap
-    protocol — every sink (upsert, kmv fold, cms fold) goes through
-    here, so a protocol fix lands everywhere at once (review find:
-    three verbatim copies had tripled the surface a missed edit could
-    silently reintroduce a crash-loss bug on). Callers run
-    ``_recover`` first."""
+    """Materialize ``df`` to the staging dir, then swap it live:
+    retire live → promote staged → roll back on failure → clean up
+    the retired copy. Callers run ``_recover`` first.
+
+    The merge plan reads the live table, so it cannot overwrite it in
+    one pass. Dir rename is atomic on local/HDFS filesystems; on
+    S3-like object stores rename is copy+delete — use a lakehouse
+    format's transactional ``MERGE INTO`` there instead."""
     df.write.mode("overwrite").parquet(base + "__staging")
     if fs.exists(old):
         fs.delete(old, True)
@@ -79,6 +116,122 @@ def _swap_in(df: DataFrame, fs, live, staged, old, base: str) -> None:
     fs.delete(old, True)
 
 
+def _check_k(rows: DataFrame, k: int, path: str) -> None:
+    """Raise unless the state ``rows`` were built with ``k`` registers.
+    A build emits all registers ``i = 0..k-1`` of every group, so the
+    state's k is ``max(i) + 1``; a merge across two k values would mix
+    inconsistent register sets silently."""
+    mi = rows.agg(F.max("i")).first()[0]
+    if mi is not None and mi + 1 != k:
+        raise ValueError(
+            f"live state at {path} was built with k={mi + 1} but the "
+            f"caller supplied k={k}; merging across k mixes inconsistent "
+            "register sets. Use the state's k or rebuild the state."
+        )
+
+
+def _check_stamp(
+    state: DataFrame, col: str, want, what: str, path: str
+) -> None:
+    """Raise unless the state's ``col`` stamp (one value on every row)
+    equals ``want``: a state built with another ``what`` cannot be
+    merged with this caller's batches."""
+    if col not in state.columns:
+        raise ValueError(
+            f"live state at {path} predates the {col} stamp; rebuild the "
+            "streamed state once (drop the table and its checkpoint)."
+        )
+    got = state.select(col).first()
+    if got is not None and got[0] != want:
+        raise ValueError(
+            f"live state at {path} has {what} {got[0]} but the caller "
+            f"supplied {what} {want}; folding across them corrupts the "
+            f"state. Use the state's {what} or rebuild the state."
+        )
+
+
+def _fold(
+    spark: SparkSession,
+    path: str,
+    delta: DataFrame,
+    merge: Callable[[DataFrame], DataFrame],
+    *,
+    k: int | None = None,
+    stamp: tuple[str, object, str] | None = None,
+    ledger: tuple[Column, str, dict] | None = None,
+) -> None:
+    """Fold one batch into the state table at ``path``: recover →
+    read state → stamp guard → replay skip → merge → staged swap.
+
+    ``delta`` is the batch in the state's schema and becomes the table
+    when no live state exists; otherwise ``merge(state)`` returns the
+    new table from the live state's payload rows. Only a genuinely
+    missing table (probed through the Hadoop FS) takes the first-fold
+    branch, so a failing read or merge raises instead of overwriting
+    history with one batch.
+
+    Guards run on the live state before anything else reads it:
+    ``k`` checks the register count (:func:`_check_k`, payload rows
+    only); ``stamp = (col, want, what)`` checks a stamp column
+    (:func:`_check_stamp`).
+
+    ``ledger = (is_entry, id_col, entry)`` keeps an applied-batch
+    ledger inside the table: ``is_entry`` is true on ledger rows, which
+    carry a folded batch id in ``id_col``, and ``entry`` maps columns to
+    this batch's ledger row (absent columns are NULL). A batch whose id
+    is already ledgered is skipped; otherwise the merged payload, the
+    old ledger rows and the new entry are swapped in together, so no
+    crash point commits a fold without its ledger entry."""
+    base = path.rstrip("/")
+    fs, Path, live = _hadoop_fs(spark, base)
+    staged, old = _swap_dirs(Path, base)
+    _recover(fs, Path, live, staged, old)
+    is_entry, id_col, entry = ledger or (None, None, None)
+    if not fs.exists(live):
+        merged = delta
+    else:
+        state = spark.read.parquet(path)
+        payload = state if ledger is None else state.filter(~is_entry)
+        if k is not None:
+            _check_k(payload, k, path)
+        if stamp is not None:
+            _check_stamp(state, *stamp, path)
+        if ledger is not None and state.filter(
+            is_entry & (F.col(id_col) == entry[id_col])
+        ).limit(1).count():
+            return  # replayed batch: already folded
+        merged = merge(payload)
+        if ledger is not None:
+            merged = merged.unionByName(state.filter(is_entry))
+    if ledger is not None:
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in delta.schema]
+        )
+        row = [[entry.get(c) for c in schema.names]]
+        merged = merged.unionByName(local_frame(spark, row, schema))
+    _swap_in(merged, fs, live, staged, old, base)
+
+
+def _attach(
+    stream: DataFrame,
+    checkpoint: str,
+    fold: Callable[[SparkSession, DataFrame, int], None],
+):
+    """Run ``fold(spark, batch, batch_id)`` on every micro-batch of
+    ``stream`` until the available input is consumed. Returns the
+    StreamingQuery (caller awaits/stops it)."""
+    spark = stream.sparkSession
+    return (
+        stream.writeStream.foreachBatch(
+            lambda batch, batch_id: fold(spark, batch, batch_id)
+        )
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def upsert_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -87,45 +240,23 @@ def upsert_batch(
     ts_col: str,
 ) -> None:
     """Merge one batch into the parquet table at ``path``: per key keep
-    the row with the highest ``ts_col`` (incoming wins ties).
-
-    The merged result is materialized to a staging dir BEFORE the live
-    table is replaced (the merge plan reads the live table, so it
-    cannot write over it in one pass). The replace is a rename-based
-    swap — retire live to ``__old``, promote ``__staging`` to live —
-    and every entry first runs crash recovery: a committed staging dir
-    (``_SUCCESS`` present) or the retired previous table is promoted
-    back if a prior run died mid-swap, so no crash point loses data.
-    Dir rename is atomic on local/HDFS filesystems; on S3-like object
-    stores rename is copy+delete — use a lakehouse format's
-    transactional ``MERGE INTO`` there instead.
-
-    First-batch detection probes existence through the Hadoop
-    FileSystem API for the path's scheme — no error-message matching —
-    so ONLY a genuinely missing table takes the first-batch branch;
-    any read/merge failure (schema drift, corrupt footer, transient FS
-    error) raises rather than overwriting history with one micro-batch.
-    """
+    the row with the highest ``ts_col`` (incoming wins ties), through
+    the staged swap and crash recovery of :func:`_fold`. A failing
+    read or merge raises rather than overwriting history with one
+    batch."""
     from gpi_etl_spark.operators.watermark import upsert_by_key
 
     keys = list(keys)
-    base = path.rstrip("/")
-    fs, Path, live = _hadoop_fs(spark, base)
-    staged, old = Path(base + "__staging"), Path(base + "__old")
-
-    _recover(fs, Path, live, staged, old)
-
-    if fs.exists(live):
-        current = spark.read.parquet(path)
-        winner = upsert_by_key(current, batch, keys, ts_col)
-    else:
-        w = Window.partitionBy(*keys).orderBy(F.col(ts_col).desc())
-        winner = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    _swap_in(winner, fs, live, staged, old, base)
+    w = Window.partitionBy(*keys).orderBy(F.col(ts_col).desc())
+    first = (
+        batch.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+    _fold(
+        spark, path, first,
+        lambda state: upsert_by_key(state, batch, keys, ts_col),
+    )
 
 
 def stream_upsert(
@@ -134,23 +265,12 @@ def stream_upsert(
     keys: Sequence[str],
     ts_col: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ):
-    """Attach the upsert sink to a streaming DataFrame. Returns the
-    StreamingQuery (caller awaits/stops it)."""
-    spark = stream.sparkSession
-
-    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        upsert_batch(spark, batch_df, path, keys, ts_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    """Attach the upsert sink to a streaming DataFrame."""
+    return _attach(
+        stream, checkpoint,
+        lambda spark, b, _id: upsert_batch(spark, b, path, keys, ts_col),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def kmv_fold_batch(
@@ -164,58 +284,21 @@ def kmv_fold_batch(
 ) -> None:
     """Fold one micro-batch into the maintained KMV register table at
     ``path``: build the batch's registers (operators/sketches.py
-    kmv_build) and merge register-wise (kmv_merge — min), through the
-    same staged ``_SUCCESS``-gated rename-swap and crash recovery as
-    upsert_batch.
+    kmv_build) and merge register-wise (kmv_merge — min).
 
-    This sink is IDEMPOTENT BY ALGEBRA, which upsert_batch is not:
-    min is commutative, associative and idempotent, so an
-    at-least-once foreachBatch REPLAY of any batch folds to the
-    identical register table (a batch's registers re-min to
-    themselves), and any delivery split of the source produces the
-    identical final state. The state is ``|groups|·k`` rows however
-    much data streamed through — the sketch IS the streaming
-    aggregate a 100 TB pipeline can actually keep. The ``fam``
-    derivation tag rides the state table, so a checkpoint that
-    straddles a kmv_build family upgrade fails loudly at the first
-    merge instead of mixing register families silently; the caller's
-    ``k`` is likewise checked against the state's own k (max register
-    index + 1 — kmv_build emits all k registers per group) before
-    merging, because k drift was the one compatibility axis the fam
-    tag could not see (advice find)."""
+    IDEMPOTENT BY ALGEBRA, so no ledger: min is commutative,
+    associative and idempotent, so an at-least-once replay of any
+    batch, and any delivery split of the source, folds to the
+    identical register table. The state is ``|groups|·k`` rows however
+    much data streams through. The ``fam`` derivation tag rides the
+    state table, so a family change fails at the first merge; the
+    caller's ``k`` is checked against the state's k before merging."""
     from gpi_etl_spark.operators.sketches import kmv_build, kmv_merge
 
     delta = kmv_build(
         batch, item_col, group_cols=group_cols, k=k, hash_mode=hash_mode
     )
-    base = path.rstrip("/")
-    fs, Path, live = _hadoop_fs(spark, base)
-    staged, old = Path(base + "__staging"), Path(base + "__old")
-    _recover(fs, Path, live, staged, old)
-    if fs.exists(live):
-        state = spark.read.parquet(path)
-        # k-drift guard (advice find): the fam tag catches hash-family
-        # drift but not k drift — folding k=16 deltas into a k=64
-        # state would merge silently, leaving per-group register
-        # counts inconsistent and mis-scaling every later
-        # kmv_estimate (which derives k from the row count). k is
-        # derived from the state itself: kmv_build always emits ALL
-        # registers i = 0..k-1 for every group, so max(i) + 1 IS the
-        # build's k. One tiny aggregate over |groups|·k bounded state
-        # rows, in a sink that already runs driver-side FS probes.
-        row = state.agg(F.max("i").alias("mi")).collect()[0]
-        if row.mi is not None and row.mi + 1 != k:
-            raise ValueError(
-                f"kmv_fold_batch: live state at {path} was built with "
-                f"k={row.mi + 1} but the caller supplied k={k} — "
-                "register-wise min across different k merges "
-                "inconsistent register sets silently. Use the "
-                "state's k or rebuild the state."
-            )
-        merged = kmv_merge(state, delta)
-    else:
-        merged = delta
-    _swap_in(merged, fs, live, staged, old, base)
+    _fold(spark, path, delta, lambda state: kmv_merge(state, delta), k=k)
 
 
 def stream_kmv(
@@ -226,27 +309,16 @@ def stream_kmv(
     group_cols: tuple[str, ...] = (),
     k: int = 64,
     hash_mode: str = "xxhash64",
-    trigger_available_now: bool = True,
 ):
     """Attach the KMV register-fold sink to a streaming DataFrame —
-    a distinct-count sketch maintained as micro-batch state. Returns
-    the StreamingQuery (caller awaits/stops it)."""
-    spark = stream.sparkSession
-
-    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        kmv_fold_batch(
-            spark, batch_df, path, item_col,
+    a distinct-count sketch maintained as micro-batch state."""
+    return _attach(
+        stream, checkpoint,
+        lambda spark, b, _id: kmv_fold_batch(
+            spark, b, path, item_col,
             group_cols=group_cols, k=k, hash_mode=hash_mode,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 #: sentinel row index marking applied-batch-id ledger rows inside a
@@ -256,8 +328,8 @@ CMS_LEDGER_ROW = -1
 
 def cms_state(spark: SparkSession, path: str) -> DataFrame:
     """The COUNTER rows of a streamed CMS state table (strips the
-    applied-batch ledger rows cms_fold_batch embeds — see its
-    docstring). Feed this to cms_estimate / cms_join_size."""
+    applied-batch ledger rows cms_fold_batch embeds). Feed this to
+    cms_estimate / cms_join_size."""
     t = spark.read.parquet(path)
     return t.filter(F.col("row") != CMS_LEDGER_ROW)
 
@@ -272,85 +344,30 @@ def cms_fold_batch(
     depth: int = 4,
     hash_mode: str = "xxhash64",
 ) -> None:
-    """Fold one micro-batch into a maintained CMS counter table —
-    with an APPLIED-BATCH LEDGER, because counter ADDITION is not
-    idempotent: an at-least-once foreachBatch replay of a batch the
-    min-fold sink (kmv_fold_batch) absorbs for free would DOUBLE
-    COUNT here. The standard remedy is idempotence by batch id —
-    Structured Streaming replays a failed batch under the SAME
-    ``batch_id``, so a ledger of applied ids makes the fold
-    exactly-once: a replayed id is skipped before anything merges.
+    """Fold one micro-batch into a maintained CMS counter table.
+    Counter addition is not idempotent, so the fold keeps an
+    applied-batch ledger: Structured Streaming replays a failed batch
+    under the SAME ``batch_id``, and a ledgered id is skipped before
+    anything merges, which makes the fold exactly-once.
 
-    The ledger lives INSIDE the state table as sentinel rows
-    ``(row = CMS_LEDGER_ROW, col = batch_id, c = 1)`` — one parquet
-    dir, one atomic rename-swap, so no crash point can commit
-    counters without their ledger entry or vice versa (two tables
-    would need a cross-dir transaction the filesystem cannot give).
-    Read counters back through :func:`cms_state`. Same staged
-    ``_SUCCESS``-gated swap and crash recovery as upsert_batch;
-    state stays ``depth × width + n_batches`` rows however much data
-    streams through."""
-    from gpi_etl_spark.operators.sketches import (
-        cms_build,
-        cms_geo,
-        cms_merge,
-    )
-
-    base = path.rstrip("/")
-    fs, Path, live = _hadoop_fs(spark, base)
-    staged, old = Path(base + "__staging"), Path(base + "__old")
-    _recover(fs, Path, live, staged, old)
+    Ledger rows are ``(row = CMS_LEDGER_ROW, col = batch_id, c = 1,
+    geo)`` inside the state table. Every row carries the ``geo``
+    geometry stamp (sketches.cms_geo), and a live state with another
+    width, depth or hash_mode raises before counters from two bucket
+    spaces add. Read counters back through :func:`cms_state`; the state
+    stays ``depth × width + n_batches`` rows."""
+    from gpi_etl_spark.operators.sketches import cms_build, cms_geo, cms_merge
 
     geo = cms_geo(width, depth, hash_mode)
-    # ledger rows carry the state's geometry stamp too — one schema,
-    # one table, and cms_merge's geo guard stays satisfiable
-    ledger_row = spark.createDataFrame(
-        [(CMS_LEDGER_ROW, int(batch_id), 1, geo)],
-        "row int, col int, c bigint, geo string",
+    delta = cms_build(
+        batch, item_col, width=width, depth=depth, hash_mode=hash_mode
     )
-    if fs.exists(live):
-        state = spark.read.parquet(path)
-        # geometry-drift guard (advice find, eager twin of the lazy
-        # cms_merge guard): a checkpoint that straddles a width/depth/
-        # hash_mode change must die HERE, before counters from two
-        # bucket spaces ever add. One first() over KB-bounded state in
-        # a sink already running driver-side ledger probes.
-        if "geo" not in state.columns:
-            raise ValueError(
-                f"cms_fold_batch: live state at {path} predates the "
-                "geometry stamp — rebuild the streamed state once "
-                "(drop the table + checkpoint) to upgrade."
-            )
-        got = state.select("geo").first()
-        if got is not None and got.geo != geo:
-            raise ValueError(
-                f"cms_fold_batch: live state at {path} was built "
-                f"with geometry {got.geo} but the caller supplied "
-                f"{geo} — counter addition across bucket spaces is "
-                "meaningless. Use the state's geometry or rebuild."
-            )
-        applied = (
-            state.filter(
-                (F.col("row") == CMS_LEDGER_ROW)
-                & (F.col("col") == int(batch_id))
-            ).limit(1).count()
-        )
-        if applied:
-            return  # replayed batch — already folded, exactly-once
-        counters = state.filter(F.col("row") != CMS_LEDGER_ROW)
-        ledger = state.filter(F.col("row") == CMS_LEDGER_ROW)
-        delta = cms_build(
-            batch, item_col, width=width, depth=depth, hash_mode=hash_mode
-        )
-        merged = cms_merge(counters, delta).unionByName(ledger).unionByName(
-            ledger_row
-        )
-    else:
-        delta = cms_build(
-            batch, item_col, width=width, depth=depth, hash_mode=hash_mode
-        )
-        merged = delta.unionByName(ledger_row)
-    _swap_in(merged, fs, live, staged, old, base)
+    entry = {"row": CMS_LEDGER_ROW, "col": int(batch_id), "c": 1, "geo": geo}
+    _fold(
+        spark, path, delta, lambda counters: cms_merge(counters, delta),
+        stamp=("geo", geo, "geometry"),
+        ledger=(F.col("row") == CMS_LEDGER_ROW, "col", entry),
+    )
 
 
 def stream_cms(
@@ -361,27 +378,17 @@ def stream_cms(
     width: int = 512,
     depth: int = 4,
     hash_mode: str = "xxhash64",
-    trigger_available_now: bool = True,
 ):
     """Attach the ledgered CMS counter-fold sink to a streaming
     DataFrame — a frequency sketch maintained as exactly-once
-    micro-batch state. Returns the StreamingQuery."""
-    spark = stream.sparkSession
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cms_fold_batch(
-            spark, batch_df, batch_id, path, item_col,
+    micro-batch state."""
+    return _attach(
+        stream, checkpoint,
+        lambda spark, b, batch_id: cms_fold_batch(
+            spark, b, batch_id, path, item_col,
             width=width, depth=depth, hash_mode=hash_mode,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 #: sentinel register index marking applied-batch-id ledger rows inside
@@ -407,24 +414,16 @@ def ams_fold_batch(
     hash_mode: str = "xxhash64",
 ) -> None:
     """Fold one micro-batch into a maintained AMS component table —
-    the streaming F₂/self-join-size monitor: per micro-batch the
-    batch's signed counters ADD into the state (the sketch is linear),
-    so a pipeline can watch a key column's skew number grow in real
-    time for the cost of k int64s of state. Addition is not
-    idempotent, so the sink reuses the CMS sink's APPLIED-BATCH LEDGER
-    design verbatim: sentinel rows ``(i = AMS_LEDGER_I, x = batch_id,
-    fam = <family>)`` ride INSIDE the state table and a replayed
-    batch_id is skipped before anything merges — one parquet dir, one
-    atomic rename-swap, no crash point that commits components
-    without their ledger entry. Same staged ``_SUCCESS``-gated swap
-    and recovery as upsert_batch; read components back through
-    :func:`ams_state`.
+    the streaming F₂/self-join-size monitor: the sketch is linear, so
+    each batch's signed counters ADD into the state for the cost of k
+    int64s. Addition is not idempotent, so the fold keeps the
+    applied-batch ledger of :func:`cms_fold_batch`: ledger rows are
+    ``(i = AMS_LEDGER_I, x = batch_id, fam)``, and a ledgered batch id
+    is skipped. Read components back through :func:`ams_state`.
 
-    Compatibility guards (the round-10 lesson, applied at birth):
-    the state's ``fam`` tag and its derived k (max component index
-    + 1) are BOTH checked eagerly against the caller before merging —
-    family or k drift across a checkpoint raises instead of silently
-    mixing sign-hash spaces."""
+    The state's k (max component index + 1) and its ``fam`` tag are
+    both checked against the caller before merging: k or family drift
+    across a checkpoint raises instead of mixing sign-hash spaces."""
     from gpi_etl_spark.operators.sketches import (
         AMS_FAMILIES,
         ams_build,
@@ -435,53 +434,14 @@ def ams_fold_batch(
     if hash_mode not in AMS_FAMILIES:
         raise ValueError(f"unknown hash_mode {hash_mode!r}")
     fam = ams_fam(hash_mode, k)
-    base = path.rstrip("/")
-    fs, Path, live = _hadoop_fs(spark, base)
-    staged, old = Path(base + "__staging"), Path(base + "__old")
-    _recover(fs, Path, live, staged, old)
-
-    ledger_row = spark.createDataFrame(
-        [(AMS_LEDGER_I, int(batch_id), fam)],
-        "i int, x bigint, fam string",
+    delta = ams_build(batch, item_col, k=k, hash_mode=hash_mode)
+    entry = {"i": AMS_LEDGER_I, "x": int(batch_id), "fam": fam}
+    _fold(
+        spark, path, delta, lambda comps: ams_merge(comps, delta),
+        k=k,
+        stamp=("fam", fam, "family"),
+        ledger=(F.col("i") == AMS_LEDGER_I, "x", entry),
     )
-    if fs.exists(live):
-        state = spark.read.parquet(path)
-        comps = state.filter(F.col("i") != AMS_LEDGER_I)
-        got = comps.agg(
-            F.max("i").alias("mi"), F.max("fam").alias("fam")
-        ).collect()[0]
-        if got.mi is not None and got.mi + 1 != k:
-            raise ValueError(
-                f"ams_fold_batch: live state at {path} was built with "
-                f"k={got.mi + 1} but the caller supplied k={k} — "
-                "component-wise addition across different k merges "
-                "inconsistent component sets silently. Use the "
-                "state's k or rebuild."
-            )
-        if got.fam is not None and got.fam != fam:
-            raise ValueError(
-                f"ams_fold_batch: live state at {path} carries family "
-                f"{got.fam} but the caller supplied {fam} — sign "
-                "hashes from different families are incompatible. "
-                "Use the state's hash_mode or rebuild."
-            )
-        applied = (
-            state.filter(
-                (F.col("i") == AMS_LEDGER_I)
-                & (F.col("x") == int(batch_id))
-            ).limit(1).count()
-        )
-        if applied:
-            return  # replayed batch — already folded, exactly-once
-        ledger = state.filter(F.col("i") == AMS_LEDGER_I)
-        delta = ams_build(batch, item_col, k=k, hash_mode=hash_mode)
-        merged = ams_merge(comps, delta).unionByName(ledger).unionByName(
-            ledger_row
-        )
-    else:
-        delta = ams_build(batch, item_col, k=k, hash_mode=hash_mode)
-        merged = delta.unionByName(ledger_row)
-    _swap_in(merged, fs, live, staged, old, base)
 
 
 def stream_ams(
@@ -491,27 +451,16 @@ def stream_ams(
     checkpoint: str,
     k: int = 64,
     hash_mode: str = "xxhash64",
-    trigger_available_now: bool = True,
 ):
     """Attach the ledgered AMS component-fold sink to a streaming
     DataFrame — a self-join-size / skew sketch maintained as
-    exactly-once micro-batch state. Returns the StreamingQuery."""
-    spark = stream.sparkSession
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ams_fold_batch(
-            spark, batch_df, batch_id, path, item_col,
-            k=k, hash_mode=hash_mode,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    exactly-once micro-batch state."""
+    return _attach(
+        stream, checkpoint,
+        lambda spark, b, batch_id: ams_fold_batch(
+            spark, b, batch_id, path, item_col, k=k, hash_mode=hash_mode,
+        ),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def agg_state(spark: SparkSession, path: str) -> DataFrame:
@@ -532,25 +481,20 @@ def agg_fold_batch(
 ) -> None:
     """Fold one micro-batch into an EXACT incremental materialized
     aggregate — per-group ``sum(value)`` + ``count`` maintained as
-    micro-batch state. This is the most common production ask of a
-    streaming pipeline (the revenue-by-type dashboard table), and the
-    EXACT sibling of the sketch sinks: same applied-batch-id ledger
-    (sums are not idempotent — a replayed batch_id is skipped before
-    anything merges), same one-parquet-dir atomic rename-swap (no
-    crash point splits aggregates from their ledger entry), state
-    bounded at |groups| + n_batches rows forever. Ledger rows ride as
-    ``is_ledger = true`` with the batch id in ``c`` — a dedicated
-    flag column, NOT a sentinel group value, because ANY group value
-    (including NULL) is legitimate aggregate state here.
+    micro-batch state, bounded at |groups| + n_batches rows. Sums are
+    not idempotent, so the fold keeps the applied-batch ledger of
+    :func:`cms_fold_batch`. Ledger rows ride as ``is_ledger = true``
+    with the batch id in ``c`` — a flag column, NOT a sentinel group
+    value, because ANY group value (including NULL) is legitimate
+    aggregate state here.
 
-    ``value_col`` must be an exact integer column (cents, micro-units
-    — the repo's convention; floats would make the maintained view
-    order-dependent) and NON-NULL: a NULL value raises at execution
-    (sum() silently skipping it while count() counts the row would
-    corrupt the view's mean forever — the cms weighted-builder
-    lesson). Σ|value| must stay inside int64 across the stream's
-    lifetime — the ANSI sum overflow raises rather than wrapping.
-    Read back through :func:`agg_state`."""
+    ``value_col`` must be an exact integer column (cents, micro-units;
+    floats would make the maintained view order-dependent) and
+    NON-NULL: a NULL value raises at execution, since sum() skipping
+    it while count() counts the row would corrupt the view's mean.
+    Σ|value| must stay inside int64 across the stream's lifetime — the
+    ANSI sum overflow raises rather than wrapping. Read back through
+    :func:`agg_state`."""
     vg = F.when(
         F.col(value_col).isNotNull(), F.col(value_col).cast("bigint")
     ).otherwise(
@@ -571,26 +515,9 @@ def agg_fold_batch(
     ).select(
         "g", "s", "c", F.lit(False).alias("is_ledger")
     )
-    ledger_row = spark.createDataFrame(
-        [(None, None, int(batch_id), True)],
-        "g string, s bigint, c bigint, is_ledger boolean",
-    )
-    base = path.rstrip("/")
-    fs, Path, live = _hadoop_fs(spark, base)
-    staged, old = Path(base + "__staging"), Path(base + "__old")
-    _recover(fs, Path, live, staged, old)
-    if fs.exists(live):
-        state = spark.read.parquet(path)
-        applied = (
-            state.filter(
-                F.col("is_ledger") & (F.col("c") == int(batch_id))
-            ).limit(1).count()
-        )
-        if applied:
-            return  # replayed batch — already folded, exactly-once
-        aggs = state.filter(~F.col("is_ledger"))
-        ledger = state.filter(F.col("is_ledger"))
-        merged = (
+
+    def merge(aggs: DataFrame) -> DataFrame:
+        return (
             aggs.unionByName(delta)
             .groupBy("g")
             .agg(
@@ -598,12 +525,14 @@ def agg_fold_batch(
                 F.sum("c").cast("bigint").alias("c"),
             )
             .select("g", "s", "c", F.lit(False).alias("is_ledger"))
-            .unionByName(ledger)
-            .unionByName(ledger_row)
         )
-    else:
-        merged = delta.unionByName(ledger_row)
-    _swap_in(merged, fs, live, staged, old, base)
+
+    _fold(
+        spark, path, delta, merge,
+        ledger=(
+            F.col("is_ledger"), "c", {"c": int(batch_id), "is_ledger": True}
+        ),
+    )
 
 
 def stream_agg_view(
@@ -612,36 +541,25 @@ def stream_agg_view(
     group_col: str,
     value_col: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ):
     """Attach the exact incremental-aggregate sink to a streaming
     DataFrame — a per-group sum/count materialized view maintained
-    exactly-once. Returns the StreamingQuery."""
-    spark = stream.sparkSession
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        agg_fold_batch(
-            spark, batch_df, batch_id, path, group_col, value_col
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    exactly-once."""
+    return _attach(
+        stream, checkpoint,
+        lambda spark, b, batch_id: agg_fold_batch(
+            spark, b, batch_id, path, group_col, value_col
+        ),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def sample_fam(k: int, hash_mode: str) -> str:
-    """The geometry/derivation stamp a streamed bottom-k sample state
-    table carries (the cms_geo/kmv-fam lesson applied at birth):
-    priorities depend on the hash family, and the retained-set size
-    IS the state's geometry — folding a k=16 delta into a k=64 state,
-    or xxhash64 priorities into poly state, silently corrupts the
-    sample. Bump the ``samp1`` segment on any future priority-
-    derivation change."""
+    """The geometry stamp a streamed bottom-k sample state table
+    carries: priorities depend on the hash family, and the
+    retained-set size IS the state's geometry — folding a k=16 delta
+    into a k=64 state, or xxhash64 priorities into poly state,
+    silently corrupts the sample. Bump the ``samp1`` segment on any
+    future priority-derivation change."""
     return f"samp1-{hash_mode}-k{k}"
 
 
@@ -665,64 +583,36 @@ def sample_fold_batch(
 ) -> None:
     """Fold one micro-batch into a maintained coordinated bottom-k
     KEY sample (operators/sampling.py::sample_keys_bottomk as
-    streamed state) — "keep a deterministic k-key debug slice of this
-    stream, forever" at ``k·|groups|`` state rows however much data
-    flows. Like the kmv sink (and unlike cms/ams/agg), this fold is
-    IDEMPOTENT BY ALGEBRA, so no applied-batch ledger is needed: the
-    sample is a pure function of the SET of keys seen — bottom-k of a
-    union, with the per-key priority recomputed from the key itself —
-    so an at-least-once replay or any delivery split folds to the
-    identical state (min-heap algebra; delivery invariance pinned in
-    tests). The batch reduces to its own bottom-k first (≤ k·|groups|
+    streamed state) at ``k·|groups|`` state rows however much data
+    flows. IDEMPOTENT BY ALGEBRA, so no ledger: the sample is a pure
+    function of the SET of keys seen — bottom-k of a union, with each
+    key's priority recomputed from the key itself — so an
+    at-least-once replay or any delivery split folds to the identical
+    state. The batch reduces to its own bottom-k first (≤ k·|groups|
     rows enter the merge), then the union with live state re-reduces.
 
-    The ``fam`` stamp (:func:`sample_fam`) guards both drift axes
-    eagerly, the stream_cms pattern: a checkpoint straddling a k or
-    hash_mode change dies at the first fold instead of merging
-    incompatible priorities. NOTE the DLT weighted sampler
-    (sampling.priority_sample) deliberately has NO streamed twin:
-    accumulating key weights re-order priorities, so its sample is
-    not maintainable from bounded state — the unweighted coordinated
-    sample is the one that streams."""
+    The ``fam`` stamp (:func:`sample_fam`) guards both drift axes: a
+    checkpoint straddling a k or hash_mode change raises at the first
+    fold. The weighted sampler (sampling.priority_sample) has NO
+    streamed twin: accumulating key weights re-order priorities, so
+    its sample is not maintainable from bounded state."""
     from gpi_etl_spark.operators.sampling import sample_keys_bottomk
 
     fam = sample_fam(k, hash_mode)
-    delta = sample_keys_bottomk(
-        batch, key_col, k, group_cols, hash_mode
-    ).withColumn("fam", F.lit(fam))
-    base = path.rstrip("/")
-    fs, Path, live = _hadoop_fs(spark, base)
-    staged, old = Path(base + "__staging"), Path(base + "__old")
-    _recover(fs, Path, live, staged, old)
-    if fs.exists(live):
-        state = spark.read.parquet(path)
-        if "fam" not in state.columns:
-            raise ValueError(
-                f"sample_fold_batch: live state at {path} predates "
-                "the fam stamp — rebuild the streamed sample once "
-                "(drop the table + checkpoint) to upgrade."
-            )
-        got = state.select("fam").first()
-        if got is not None and got.fam != fam:
-            raise ValueError(
-                f"sample_fold_batch: live state at {path} was built "
-                f"as {got.fam} but the caller supplied {fam} — "
-                "bottom-k over mixed priority families or k sizes "
-                "corrupts the sample. Use the state's geometry or "
-                "rebuild."
-            )
-        merged = sample_keys_bottomk(
-            state.drop("fam", "pri").unionByName(
-                delta.drop("fam", "pri")
-            ),
-            key_col,
-            k,
-            group_cols,
-            hash_mode,
+
+    def bottomk(df: DataFrame) -> DataFrame:
+        return sample_keys_bottomk(
+            df, key_col, k, group_cols, hash_mode
         ).withColumn("fam", F.lit(fam))
-    else:
-        merged = delta
-    _swap_in(merged, fs, live, staged, old, base)
+
+    delta = bottomk(batch)
+    _fold(
+        spark, path, delta,
+        lambda state: bottomk(
+            state.drop("fam", "pri").unionByName(delta.drop("fam", "pri"))
+        ),
+        stamp=("fam", fam, "geometry"),
+    )
 
 
 def stream_key_sample(
@@ -733,27 +623,16 @@ def stream_key_sample(
     k: int = 64,
     group_cols: tuple[str, ...] = (),
     hash_mode: str = "xxhash64",
-    trigger_available_now: bool = True,
 ):
     """Attach the bottom-k sample-fold sink to a streaming DataFrame —
-    a coordinated key sample maintained as micro-batch state. Returns
-    the StreamingQuery."""
-    spark = stream.sparkSession
-
-    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        sample_fold_batch(
-            spark, batch_df, path, key_col, k,
+    a coordinated key sample maintained as micro-batch state."""
+    return _attach(
+        stream, checkpoint,
+        lambda spark, b, _id: sample_fold_batch(
+            spark, b, path, key_col, k,
             group_cols=group_cols, hash_mode=hash_mode,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        ),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 #: sentinel sign marking applied-batch-id ledger rows inside a
@@ -778,65 +657,32 @@ def rq_fold_batch(
     digits: int = 3,
 ) -> None:
     """Fold one micro-batch into a maintained rq bucket table — the
-    streaming QUANTILE monitor: histograms are linear, so each
-    batch's bucket counts ADD into the state (rq_merge's law) and a
-    pipeline watches a value column's full distribution (any
-    quantile, any range selectivity via rq_range_estimate) for a few
-    thousand int64s of state. Addition is not idempotent, so this
-    reuses the CMS sink's APPLIED-BATCH LEDGER design verbatim:
-    sentinel rows ``(sign = RQ_LEDGER_SIGN, p = 0, lead = batch_id,
-    cnt = 1, dig = digits)`` ride INSIDE the state table and a
-    replayed batch_id is skipped before anything merges — one
-    parquet dir, one atomic rename-swap, no crash point that commits
-    buckets without their ledger entry. Same staged
-    ``_SUCCESS``-gated swap and recovery as upsert_batch; read
-    buckets back through :func:`rq_state`.
+    streaming QUANTILE monitor: histograms are linear, so each batch's
+    bucket counts ADD into the state (rq_merge's law), and a pipeline
+    watches a value column's full distribution (any quantile, any
+    range selectivity via rq_range_estimate) for a few thousand int64s
+    of state. Addition is not idempotent, so the fold keeps the
+    applied-batch ledger of :func:`cms_fold_batch`: ledger rows are
+    ``(sign = RQ_LEDGER_SIGN, p = 0, lead = batch_id, cnt = 1,
+    dig = digits)``, and a ledgered batch id is skipped. Read buckets
+    back through :func:`rq_state`.
 
-    Geometry guard (the cms_fold_batch twin): ``dig`` rides in every
-    row, and a live state whose digits disagree with the caller dies
-    HERE — bucket addition across granularities is meaningless (two
-    dig generations rarely share bucket keys, so the mix would pass
-    rq_merge silently and corrupt every quantile walk)."""
+    ``dig`` rides in every row, and a live state whose digits disagree
+    with the caller raises: two digit generations rarely share bucket
+    keys, so their mix would pass rq_merge silently and corrupt every
+    quantile walk."""
     from gpi_etl_spark.operators.sketches import rq_build, rq_merge
 
-    base = path.rstrip("/")
-    fs, Path, live = _hadoop_fs(spark, base)
-    staged, old = Path(base + "__staging"), Path(base + "__old")
-    _recover(fs, Path, live, staged, old)
-
-    ledger_row = spark.createDataFrame(
-        [(RQ_LEDGER_SIGN, 0, int(batch_id), 1, int(digits))],
-        "sign int, p int, lead long, cnt bigint, dig int",
+    delta = rq_build(batch, cents_col, (), digits)
+    entry = {
+        "sign": RQ_LEDGER_SIGN, "p": 0, "lead": int(batch_id), "cnt": 1,
+        "dig": int(digits),
+    }
+    _fold(
+        spark, path, delta, lambda buckets: rq_merge(buckets, delta),
+        stamp=("dig", int(digits), "digits"),
+        ledger=(F.col("sign") == RQ_LEDGER_SIGN, "lead", entry),
     )
-    if fs.exists(live):
-        state = spark.read.parquet(path)
-        got = state.select("dig").first()
-        if got is not None and got.dig != int(digits):
-            raise ValueError(
-                f"rq_fold_batch: live state at {path} was built with "
-                f"digits={got.dig} but the caller supplied "
-                f"digits={digits} — bucket addition across "
-                "granularities is meaningless. Use the state's "
-                "digits or rebuild."
-            )
-        applied = (
-            state.filter(
-                (F.col("sign") == RQ_LEDGER_SIGN)
-                & (F.col("lead") == int(batch_id))
-            ).limit(1).count()
-        )
-        if applied:
-            return  # replayed batch — already folded, exactly-once
-        buckets = state.filter(F.col("sign") != RQ_LEDGER_SIGN)
-        ledger = state.filter(F.col("sign") == RQ_LEDGER_SIGN)
-        delta = rq_build(batch, cents_col, (), digits)
-        merged = rq_merge(buckets, delta).unionByName(ledger).unionByName(
-            ledger_row
-        )
-    else:
-        delta = rq_build(batch, cents_col, (), digits)
-        merged = delta.unionByName(ledger_row)
-    _swap_in(merged, fs, live, staged, old, base)
 
 
 def stream_rq(
@@ -845,23 +691,13 @@ def stream_rq(
     cents_col: str,
     checkpoint: str,
     digits: int = 3,
-    trigger_available_now: bool = True,
 ):
     """Attach the ledgered rq bucket-fold sink to a streaming
     DataFrame — a quantile/selectivity sketch maintained as
-    exactly-once micro-batch state. Returns the StreamingQuery."""
-    spark = stream.sparkSession
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rq_fold_batch(
-            spark, batch_df, batch_id, path, cents_col, digits=digits
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    exactly-once micro-batch state."""
+    return _attach(
+        stream, checkpoint,
+        lambda spark, b, batch_id: rq_fold_batch(
+            spark, b, batch_id, path, cents_col, digits=digits
+        ),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -67,41 +67,139 @@ def test_stream_upsert_across_micro_batches(spark, dirs):
     assert got == {"CU": 101.0, "SB": 20.0}
 
 
-def test_upsert_batch_crash_between_renames_recovers(spark, tmp_path, monkeypatch):
+def _upsert_case(spark):
+    frames = [
+        spark.createDataFrame(rows, SCHEMA)
+        for rows in (
+            [("CU", T0, 100.0), ("SB", T0, 20.0)],
+            [("CU", T0 + dt.timedelta(days=1), 101.0)],
+            [("WH", T0, 55.0)],
+        )
+    ]
+
+    def fold(path, batch_id):
+        upsert_batch(spark, frames[batch_id], path, ["sym"], "ts")
+
+    def state(path):
+        return {r.sym: r.close for r in spark.read.parquet(path).collect()}
+
+    expect = [
+        {"CU": 100.0, "SB": 20.0},
+        {"CU": 101.0, "SB": 20.0},
+        {"CU": 101.0, "SB": 20.0, "WH": 55.0},
+    ]
+    return fold, state, expect
+
+
+def _cms_case(spark):
+    from functools import reduce
+
+    from gpi_etl_spark.operators.sketches import cms_build
+    from gpi_etl_spark.streaming.sinks import cms_fold_batch, cms_state
+
+    frames = [
+        spark.createDataFrame(
+            [(f"u{i % m}",) for i in range(n)], "item string"
+        )
+        for m, n in ((7, 40), (11, 30), (5, 20))
+    ]
+    geometry = dict(width=64, depth=3, hash_mode="poly")
+
+    def fold(path, batch_id):
+        cms_fold_batch(
+            spark, frames[batch_id], batch_id, path, "item", **geometry
+        )
+
+    def state(path):
+        counters = sorted(map(tuple, cms_state(spark, path).collect()))
+        ledger = spark.read.parquet(path).filter("row = -1").collect()
+        return counters, sorted(r.col for r in ledger)
+
+    def direct(n):
+        union = reduce(lambda a, b: a.unionByName(b), frames[:n])
+        built = cms_build(union, "item", **geometry).collect()
+        return sorted(map(tuple, built)), list(range(n))
+
+    return fold, state, [direct(n) for n in (1, 2, 3)]
+
+
+def _agg_case(spark):
+    from gpi_etl_spark.streaming.sinks import agg_fold_batch, agg_state
+
+    batches = [
+        [("a", 10), ("a", 5), (None, 7)],
+        [("a", 1), ("b", 2), (None, 3)],
+        [("b", 4), ("c", 6)],
+    ]
+    frames = [spark.createDataFrame(b, "g string, v bigint") for b in batches]
+
+    def fold(path, batch_id):
+        agg_fold_batch(spark, frames[batch_id], batch_id, path, "g", "v")
+
+    def state(path):
+        aggs = {r.g: (r.s, r.c) for r in agg_state(spark, path).collect()}
+        ledger = sorted(
+            r.c for r in spark.read.parquet(path).filter("is_ledger").collect()
+        )
+        return aggs, ledger
+
+    def direct(n):
+        aggs = {}
+        for g, v in (row for b in batches[:n] for row in b):
+            s, c = aggs.get(g, (0, 0))
+            aggs[g] = (s + v, c + 1)
+        return aggs, list(range(n))
+
+    return fold, state, [direct(n) for n in (1, 2, 3)]
+
+
+@pytest.mark.parametrize(
+    "case", [_upsert_case, _cms_case, _agg_case], ids=["upsert", "cms", "agg"]
+)
+def test_upsert_batch_crash_between_renames_recovers(
+    spark, tmp_path, monkeypatch, case
+):
     """Kill the swap between retiring the live table and promoting the
-    staged one — the worst crash point. The next upsert_batch run must
-    self-heal (promote the committed staging dir) with NO lost rows."""
+    staged one — the worst crash point. The next fold must self-heal
+    (promote the committed staging dir) with NO lost rows. A ledgered
+    sink finds the crashed batch's id in the healed table, so
+    re-folding it writes nothing, and the next id folds exactly once."""
     from gpi_etl_spark.streaming import sinks
 
+    fold, state, expect = case(spark)
     path = str(tmp_path / "t")
-    b1 = spark.createDataFrame([("CU", T0, 100.0), ("SB", T0, 20.0)], SCHEMA)
-    upsert_batch(spark, b1, path, ["sym"], "ts")
+    fold(path, 0)
 
     def boom(fs, staged, live):
         raise RuntimeError("crash between renames")
 
-    b2 = spark.createDataFrame(
-        [("CU", T0 + dt.timedelta(days=1), 101.0)], SCHEMA
-    )
     real_promote = sinks._promote_staged
     monkeypatch.setattr(sinks, "_promote_staged", boom)
     with pytest.raises(RuntimeError, match="crash between renames"):
-        upsert_batch(spark, b2, path, ["sym"], "ts")
+        fold(path, 1)
     # the rollback restored the previous table — readable, no data loss
-    assert {r.sym: r.close for r in spark.read.parquet(path).collect()} == {
-        "CU": 100.0, "SB": 20.0,
-    }
+    assert state(path) == expect[0]
 
     # crash harder: the rollback itself also died (live dir gone)
     monkeypatch.setattr(sinks, "_promote_staged", real_promote)
     fs, Path, live = sinks._hadoop_fs(spark, path)
     fs.rename(live, Path(path + "__old"))
     assert not fs.exists(live)
-    # next batch heals from the committed staging dir, then merges
-    b3 = spark.createDataFrame([("WH", T0, 55.0)], SCHEMA)
-    upsert_batch(spark, b3, path, ["sym"], "ts")
-    got = {r.sym: r.close for r in spark.read.parquet(path).collect()}
-    assert got == {"CU": 101.0, "SB": 20.0, "WH": 55.0}
+    if case is not _upsert_case:
+        # heal from the committed staging dir; batch 1 is in its ledger
+        real_swap = sinks._swap_in
+
+        def no_write(*args):
+            raise AssertionError("a replayed batch id was folded again")
+
+        monkeypatch.setattr(sinks, "_swap_in", no_write)
+        fold(path, 1)
+        monkeypatch.setattr(sinks, "_swap_in", real_swap)
+        assert state(path) == expect[1]
+    # next batch heals from the committed staging dir (if not yet
+    # healed), then merges once
+    fold(path, 2)
+    assert state(path) == expect[2]
 
 
 def test_upsert_batch_recovers_from_retired_old_dir(spark, tmp_path):
