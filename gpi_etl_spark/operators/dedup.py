@@ -385,8 +385,9 @@ def connected_components(
     one shuffle (join + groupBy min); the loop is driver-orchestrated
     with early exit on convergence — the sanctioned pattern for
     iterative algorithms (SURVEY §3.2: driver orchestrates, each step
-    is one Spark plan). Caches each generation and localCheckpoints
-    every few rounds to keep lineage bounded.
+    is one Spark plan). Each round is ONE Spark action: the new labels
+    are checkpointed (cutting the lineage) and the count of improved
+    labels is observed on that same job.
     """
     sym = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
@@ -413,19 +414,15 @@ def connected_components(
                 F.least(
                     F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
                 ).alias("lbl"),
-                # new lbl < old lbl ⟺ a neighbor improved it: carrying
-                # the flag in the update plan replaces the old
-                # convergence check (a full new⋈old self-join per
-                # round) with a filter over the already-checkpointed
-                # frame — one fewer join job per round, identical
-                # stopping condition (round-12 optimization)
+                # new lbl < old lbl ⟺ a neighbor improved it; the
+                # checkpoint's job counts these rows, so convergence
+                # costs no join and no job of its own
                 (F.col("nlbl") < F.col("lbl")).alias("_chg"),
             )
         )
-        new_labels, _ = runscope.checkpoint(new_labels)
-        changed = new_labels.filter(F.col("_chg")).limit(1).count()
+        new_labels, changed = runscope.checkpoint(new_labels, F.col("_chg"))
         labels = new_labels.select("node", "lbl")
-        if changed == 0:
+        if not changed:
             break
     else:
         raise RuntimeError(
@@ -541,10 +538,9 @@ def prefix_shingles(
 ) -> DataFrame:
     """Each document's PPJoin prefix over an ``(id, shingle)`` frame:
     its ``|A| - ceil(t·|A|) + 1`` globally-rarest shingles, ranked by
-    (ascending corpus frequency, shingle). Shared by
-    :func:`jaccard_pairs_prefix_filtered` and the candidate-count
-    probe (``tools/scale_probe_prefixjoin.py``) so the measured recipe
-    can never drift from the shipped one."""
+    (ascending corpus frequency, shingle), as
+    :func:`jaccard_pairs_prefix_filtered` joins them. The candidate
+    counts measured over this recipe are in ``docs/PREFIX_PROBE.md``."""
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("_n"))
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_gf"))
     wrk = Window.partitionBy(id_col).orderBy(

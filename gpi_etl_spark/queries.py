@@ -4251,6 +4251,41 @@ def q99(spark, sf_dir):
     )
 
 
+def _synthetic_images(spark, sf_dir, encode) -> DataFrame:
+    """``(media_id, payload)`` for every 25th document: a gradient
+    image whose pixel ``idx`` (row-major) of channel ``ch`` holds
+    ``(base + idx + ch) % 256``, with ``base = doc_id % 100``, width
+    ``doc_id % 7 + 2`` and height ``doc_id % 5 + 2``, encoded
+    executor-side by ``encode(px, doc_id) -> bytes`` (``px`` is an
+    ``h × w × 3`` uint8 array). The image oracles replay these closed
+    forms."""
+    import pandas as _pd
+
+    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
+
+    def synth(batches):
+        import numpy as _np
+
+        for pdf in batches:
+            payloads = []
+            for did in pdf["doc_id"]:
+                base = int(did) % 100
+                w = int(did) % 7 + 2
+                h = int(did) % 5 + 2
+                idx = _np.arange(w * h, dtype=_np.uint16).reshape(h, w)
+                px = _np.stack(
+                    [(base + idx + ch) % 256 for ch in range(3)], axis=2
+                ).astype(_np.uint8)
+                payloads.append(encode(px, int(did)))
+            yield _pd.DataFrame(
+                {"media_id": pdf["doc_id"].values, "payload": payloads}
+            )
+
+    return docs.select("doc_id").mapInPandas(
+        synth, schema="media_id long, payload binary"
+    )
+
+
 @query(
     "q100_image_stats",
     """
@@ -4274,32 +4309,10 @@ def q100(spark, sf_dir):
     + gray std + encoded size checked against closed forms (mean of
     0..m-1 is (m-1)/2; population std is sqrt((m²-1)/12); BMP size is
     54 + h·stride with 4-byte row padding)."""
-    import pandas as _pd
-
     from gpi_etl_spark.operators.multimodal import encode_bmp, extract_features
 
-    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
-
-    def synth(batches):
-        import numpy as _np
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                base = int(did) % 100
-                w = int(did) % 7 + 2
-                h = int(did) % 5 + 2
-                idx = _np.arange(w * h, dtype=_np.uint16).reshape(h, w)
-                px = _np.stack(
-                    [(base + idx + ch) % 256 for ch in range(3)], axis=2
-                ).astype(_np.uint8)
-                payloads.append(encode_bmp(px))
-            yield _pd.DataFrame(
-                {"media_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    media = docs.select("doc_id").mapInPandas(
-        synth, schema="media_id long, payload binary"
+    media = _synthetic_images(
+        spark, sf_dir, lambda px, _did: encode_bmp(px)
     ).withColumn("media_type", F.lit("image"))
     feats = extract_features(
         media, media_type_col="media_type", deterministic_fake=False
@@ -5011,35 +5024,16 @@ def q106(spark, sf_dir):
     sits under the same hash gate. Runs through extract_features'
     strict default (no deterministic_fake flag): the real codec IS the
     default path."""
-    import pandas as _pd
-
     from gpi_etl_spark.operators.multimodal import encode_png, extract_features
 
-    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
+    def encode(px, did):
+        variant = did // 25 % 4
+        src = px.astype("uint16") * 257 if variant >= 2 else px
+        return encode_png(src, interlace=variant % 2 == 1)
 
-    def synth(batches):
-        import numpy as _np
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                base = int(did) % 100
-                w = int(did) % 7 + 2
-                h = int(did) % 5 + 2
-                idx = _np.arange(w * h, dtype=_np.uint16).reshape(h, w)
-                px = _np.stack(
-                    [(base + idx + ch) % 256 for ch in range(3)], axis=2
-                ).astype(_np.uint8)
-                variant = int(did) // 25 % 4
-                src = px.astype(_np.uint16) * 257 if variant >= 2 else px
-                payloads.append(encode_png(src, interlace=variant % 2 == 1))
-            yield _pd.DataFrame(
-                {"media_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    media = docs.select("doc_id").mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).withColumn("media_type", F.lit("image"))
+    media = _synthetic_images(spark, sf_dir, encode).withColumn(
+        "media_type", F.lit("image")
+    )
     feats = extract_features(media, media_type_col="media_type")
     f = F.col("feature")
     return feats.select(
@@ -5347,32 +5341,10 @@ def q119(spark, sf_dir):
     std checked against the q100 closed forms — BMP, PNG and GIF now
     provably yield bit-identical stats for identical pixels, through
     extract_features' strict default."""
-    import pandas as _pd
-
     from gpi_etl_spark.operators.multimodal import encode_gif, extract_features
 
-    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
-
-    def synth(batches):
-        import numpy as _np
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                base = int(did) % 100
-                w = int(did) % 7 + 2
-                h = int(did) % 5 + 2
-                idx = _np.arange(w * h, dtype=_np.uint16).reshape(h, w)
-                px = _np.stack(
-                    [(base + idx + ch) % 256 for ch in range(3)], axis=2
-                ).astype(_np.uint8)
-                payloads.append(encode_gif(px))
-            yield _pd.DataFrame(
-                {"media_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    media = docs.select("doc_id").mapInPandas(
-        synth, schema="media_id long, payload binary"
+    media = _synthetic_images(
+        spark, sf_dir, lambda px, _did: encode_gif(px)
     ).withColumn("media_type", F.lit("image"))
     feats = extract_features(media, media_type_col="media_type")
     f = F.col("feature")
@@ -8206,8 +8178,6 @@ def q170(spark, sf_dir):
     fingerprints hash-gate with zero tolerance) plus an all-pairs
     Hamming + recursive closure, value-checking decode, hash, banding
     and clustering end-to-end."""
-    import pandas as _pd
-
     from gpi_etl_spark.operators.dedup import connected_components
     from gpi_etl_spark.operators.multimodal import (
         dhash_images,
@@ -8215,28 +8185,8 @@ def q170(spark, sf_dir):
         encode_bmp,
     )
 
-    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
-
-    def synth(batches):
-        import numpy as _np
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                base = int(did) % 100
-                w = int(did) % 7 + 2
-                h = int(did) % 5 + 2
-                idx = _np.arange(w * h, dtype=_np.uint16).reshape(h, w)
-                px = _np.stack(
-                    [(base + idx + ch) % 256 for ch in range(3)], axis=2
-                ).astype(_np.uint8)
-                payloads.append(encode_bmp(px))
-            yield _pd.DataFrame(
-                {"media_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    media = docs.select("doc_id").mapInPandas(
-        synth, schema="media_id long, payload binary"
+    media = _synthetic_images(
+        spark, sf_dir, lambda px, _did: encode_bmp(px)
     )
     hashed = dhash_images(media)
     pairs = dhash_near_dups(hashed, max_dist=6)

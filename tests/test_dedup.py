@@ -79,6 +79,20 @@ def test_connected_components_known_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
+def test_connected_components_one_spark_action_per_round(spark, count_jobs):
+    # the known graph takes four rounds (three improving the chain's
+    # labels, one observing the fixed point); each is ONE eager
+    # checkpoint whose own job carries the changed count, with no
+    # separate per-round count() (39 jobs with one)
+    from gpi_etl_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
+        "id_a long, id_b long",
+    )
+    assert count_jobs(lambda: connected_components(edges).collect()) == 31
+
+
 def test_connected_components_converges_on_long_chain(spark):
     from gpi_etl_spark.operators.dedup import connected_components
 

@@ -93,3 +93,27 @@ def test_no_trigger_available_now_parameter():
         rel for rel, src in _sources() if "trigger_available_now" in src
     ]
     assert not offenders, f"trigger_available_now in {offenders}"
+
+
+def test_only_probe_writes_to_the_noop_sink():
+    """``tools/probe.py`` holds the tools' one timer; no other tool
+    times a frame by running it to the ``noop`` sink."""
+    tools_dir = os.path.join(os.path.dirname(PKG_DIR), "tools")
+    offenders = []
+    for fn in sorted(os.listdir(tools_dir)):
+        if not fn.endswith(".py") or fn == "probe.py":
+            continue
+        with open(os.path.join(tools_dir, fn)) as fh:
+            tree = ast.parse(fh.read())
+        offenders += [
+            f"{fn}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "format"
+            and any(
+                isinstance(a, ast.Constant) and a.value == "noop"
+                for a in node.args
+            )
+        ]
+    assert not offenders, f"noop sink writes outside tools/probe.py: {offenders}"
